@@ -190,6 +190,70 @@ _BLOOM_SOUND_TYPES = {
     str: {"string"},
 }
 
+# Point reads served on the driver (``_point_read``): key column types
+# an Arrow equality answers exactly like Spark's, with the bit width of
+# the integral ones (None: string).
+_DRIVER_KEY_BITS = {
+    "string": None, "byte": 8, "short": 16, "integer": 32, "long": 64
+}
+# Column types whose parquet → Arrow → local-relation round trip yields
+# the values Spark's own parquet scan does. Timestamps (INT96, session
+# time zone) and everything else take the Spark scan.
+_DRIVER_EXACT_TYPES = frozenset(
+    {"string", "binary", "boolean", "byte", "short", "integer", "long",
+     "float", "double", "date"}
+)
+
+
+def _driver_exact(t) -> bool:
+    """Whether a recorded (JSON) column type reads back exactly on the
+    driver path, nested types included."""
+    if isinstance(t, str):
+        return t in _DRIVER_EXACT_TYPES or t.startswith("decimal(")
+    kind = t.get("type")
+    if kind == "array":
+        return _driver_exact(t["elementType"])
+    if kind == "map":
+        return _driver_exact(t["keyType"]) and _driver_exact(t["valueType"])
+    if kind == "struct":
+        return all(_driver_exact(f["type"]) for f in t["fields"])
+    return False
+
+
+def _probe_fits(key_type: str, v) -> bool:
+    """``v`` has the Python type of the key column and fits its range,
+    so an Arrow comparison matches exactly the rows Spark's does."""
+    bits = _DRIVER_KEY_BITS[key_type]
+    if bits is None:
+        return isinstance(v, str)
+    half = 1 << (bits - 1)
+    return (
+        isinstance(v, int) and not isinstance(v, bool) and -half <= v < half
+    )
+
+
+def _as_nullable(dt):
+    """``dt`` with every field, element and map value nullable — the
+    schema Spark gives a parquet scan read with a user schema (Scala's
+    ``DataType.asNullable``)."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
+
+
 # A deletion vector row addresses one deleted row by its TABLE-RELATIVE
 # file path (anchored at the snap-* dir, so the table can be relocated)
 # and its row index within that file — parquet files are immutable once
@@ -1233,6 +1297,110 @@ class TransactionalTable:
             *[os.path.join(self.path, n) for n in dv_names]
         )
 
+    def _point_read(
+        self,
+        spark: SparkSession,
+        manifest: dict,
+        kept,
+        col: str,
+        values: list,
+        many: bool,
+    ) -> DataFrame:
+        """The rows of ``manifest``'s ``kept`` dirs with ``col =
+        values[0]`` (``many``: ``col IN values``) — the shared tail of
+        every point read. A slice the driver can serve exactly
+        (``_driver_files``) is read with ``pyarrow.dataset`` and handed
+        back as a local relation, so collecting it launches no Spark
+        job. Anything else is the ``_read_dirs`` scan plus the residual
+        filter, which turns a Bloom false positive into scan cost, never
+        a wrong row. An empty ``kept`` gives no row, with the version's
+        schema, on either path."""
+        from pyspark.sql import functions as F
+
+        served = self._driver_files(spark, manifest, kept, col, values)
+        if served is None:
+            if kept:
+                df = self._read_dirs(spark, manifest, kept)
+            else:
+                df = self._read_dirs(spark, manifest, manifest["dirs"])
+                df = df.limit(0)
+            key = F.col(col)
+            return df.filter(
+                key.isin(values) if many else key == F.lit(values[0])
+            )
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema, files = served
+        arrow_schema = to_arrow_schema(schema)
+        if not files:
+            # Not a dataset of no files: its columns have no chunks,
+            # which createDataFrame rejects.
+            table = arrow_schema.empty_table()
+        else:
+            key_type = arrow_schema.field(col).type
+            key = ds.field(col)
+            dataset = ds.dataset(files, schema=arrow_schema, format="parquet")
+            # One chunk: createDataFrame drops every row after the first
+            # empty record batch, and each file the filter emptied is one.
+            table = dataset.to_table(
+                filter=key.isin(pa.array(values, key_type))
+                if many
+                else key == pa.scalar(values[0], key_type)
+            ).combine_chunks()
+        return spark.createDataFrame(table, schema=schema)
+
+    def _driver_files(
+        self, spark: SparkSession, manifest: dict, kept, col: str, values: list
+    ):
+        """(read schema, data files) when a point read of ``kept`` can
+        be served exactly on the driver, else None. That needs the
+        version's recorded schema in types Arrow reads back exactly
+        (``_driver_exact``), no deletion vector or equality delete on a
+        kept dir, a string or integral key probed with values of its own
+        Python type and range, and flat dirs of parquet files. Their
+        on-disk bytes must also fit under
+        ``spark.sql.autoBroadcastJoinThreshold``, the size Spark already
+        trusts to one join side it ships through the driver: driver
+        memory stays bounded however large the table grows, and turning
+        broadcast off (-1) turns this path off."""
+        sj = manifest.get("schema")
+        if sj is None:
+            return None
+        dv, eq = manifest.get("dv", {}), manifest.get("eq", {})
+        if any(dv.get(d) or eq.get(d) for d in kept):
+            return None
+        types = {f["name"]: f["type"] for f in sj["fields"]}
+        key_type = types.get(col)
+        if not isinstance(key_type, str) or key_type not in _DRIVER_KEY_BITS:
+            return None
+        if not all(_probe_fits(key_type, v) for v in values):
+            return None
+        if not all(_driver_exact(t) for t in types.values()):
+            return None
+        files, size = [], 0
+        try:
+            for d in kept:
+                with os.scandir(os.path.join(self.path, d)) as entries:
+                    for e in entries:
+                        # The names Spark's file listing leaves out.
+                        if e.name.startswith(".") or (
+                            e.name.startswith("_") and "=" not in e.name
+                        ):
+                            continue
+                        if not (e.is_file() and e.name.endswith(".parquet")):
+                            return None
+                        files.append(e.path)
+                        size += e.stat().st_size
+        except OSError:
+            return None  # the Spark scan raises its own error
+        if size > spark._jconf.autoBroadcastJoinThreshold():
+            return None
+        from pyspark.sql.types import StructType
+
+        return _as_nullable(StructType.fromJson(sj)), sorted(files)
+
     def pruned_dirs(
         self,
         col: str,
@@ -1603,23 +1771,24 @@ class TransactionalTable:
     def read_eq(
         self, spark: SparkSession, col: str, value, version: int | None = None
     ) -> DataFrame:
-        """The rows of ``version`` with ``col = value``, scanning only
+        """The rows of ``version`` with ``col = value``, reading only
         the snapshot dirs whose manifest metadata (range stats + Bloom
-        bitmap, ``pruned_dirs_eq``) cannot rule out. The residual
-        equality filter is still applied — a Bloom false positive costs
-        one extra dir scan, never a wrong row. The point-lookup
+        bitmap, ``pruned_dirs_eq``) cannot rule out. The point-lookup
         counterpart of ``read_pruned``: at 100 TB an id probe touches
-        the one snapshot that can hold it."""
-        from pyspark.sql import functions as F
+        the one snapshot that can hold it.
 
+        When the kept files are small and carry no deletes, the driver
+        reads them with Arrow and returns a local relation, so the
+        caller's ``collect()`` runs no Spark job; otherwise the dirs
+        are scanned by Spark (``_point_read`` has the conditions). Both
+        paths apply the residual equality filter and return the same
+        rows and schema."""
         if version is None:
             version = self.current_version()
         kept, _ = self.pruned_dirs_eq(col, value, version)
-        if kept:
-            df = self._read_dirs(spark, self._manifest(version), kept)
-        else:
-            df = self.read(spark, version).limit(0)
-        return df.filter(F.col(col) == F.lit(value))
+        return self._point_read(
+            spark, self._manifest(version), kept, col, [value], many=False
+        )
 
     def pruned_dirs_eq_many(
         self, col: str, values, version: int | None = None
@@ -1665,20 +1834,19 @@ class TransactionalTable:
     def read_eq_many(
         self, spark: SparkSession, col: str, values, version: int | None = None
     ) -> DataFrame:
-        """The rows of ``version`` with ``col IN values``, scanning only
-        the dirs ``pruned_dirs_eq_many`` keeps; the residual IN filter
-        makes Bloom false positives a scan cost, never a wrong row —
-        ``read_eq``'s batched twin (a serving layer's multi-get)."""
-        from pyspark.sql import functions as F
-
+        """The rows of ``version`` with ``col IN values``, reading only
+        the dirs ``pruned_dirs_eq_many`` keeps — ``read_eq``'s batched
+        twin (a serving layer's multi-get). Small delete-free slices
+        are served on the driver with Arrow and run no Spark job when
+        collected; the rest fall back to a Spark scan with the residual
+        IN filter, as ``read_eq`` does."""
         if version is None:
             version = self.current_version()
+        values = list(values)
         kept, _ = self.pruned_dirs_eq_many(col, values, version)
-        if kept:
-            df = self._read_dirs(spark, self._manifest(version), kept)
-        else:
-            df = self.read(spark, version).limit(0)
-        return df.filter(F.col(col).isin(list(values)))
+        return self._point_read(
+            spark, self._manifest(version), kept, col, values, many=True
+        )
 
     def delete_where(
         self,
@@ -3762,19 +3930,19 @@ class TransactionalTable:
     def read_eq_part(
         self, spark: SparkSession, col: str, value, version: int | None = None
     ) -> DataFrame:
-        """The rows of ``version`` with ``col = value``, scanning only
-        the sub-dirs ``pruned_dirs_part_eq`` keeps. Residual filter
-        applied — identical to filtering a full read."""
-        from pyspark.sql import functions as F
-
+        """The rows of ``version`` with ``col = value``, reading only
+        the sub-dirs ``pruned_dirs_part_eq`` keeps — identical to
+        filtering a full read. This is the term lookup of a bucketed
+        postings table: a small delete-free bucket is read on the driver
+        with Arrow and its ``collect()`` runs no Spark job; any other
+        slice (deletes, large files, a probe of another type than the
+        key) is scanned by Spark, as ``read_eq`` does."""
         if version is None:
             version = self.current_version()
         kept, _ = self.pruned_dirs_part_eq(col, value, version)
-        if kept:
-            df = self._read_dirs(spark, self._manifest(version), kept)
-        else:
-            df = self.read(spark, version).limit(0)
-        return df.filter(F.col(col) == F.lit(value))
+        return self._point_read(
+            spark, self._manifest(version), kept, col, [value], many=False
+        )
 
     def diff(
         self,

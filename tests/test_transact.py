@@ -564,7 +564,7 @@ def test_pruned_dirs_requires_bound_and_real_version(spark, tmp_path):
 
 
 def test_bloom_stats_prune_point_lookups_on_unclustered_keys(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Keys scattered by id % 3 make every snapshot's [min, max] span
     the domain — range stats prune nothing — but the Bloom bitmap
@@ -589,9 +589,22 @@ def test_bloom_stats_prune_point_lookups_on_unclustered_keys(
     # id=7 lives in slice 7 % 3 == 1; ranges all overlap 7, bloom prunes.
     kept, skipped = t.pruned_dirs_eq("id", 7)
     assert kept == [d[1]] and sorted(skipped) == sorted([d[0], d[2]])
+    import pyarrow.dataset as pads
+
+    opened = []
+    real_dataset = pads.dataset
+
+    def dataset_spy(source, *args, **kwargs):
+        opened.extend(source)
+        return real_dataset(source, *args, **kwargs)
+
+    monkeypatch.setattr(pads, "dataset", dataset_spy)
     got = t.read_eq(spark, "id", 7)
     assert [r["id"] for r in got.collect()] == [7]
-    touched = {f.split("/snap-")[1].split("/")[0] for f in got.inputFiles()}
+    # Served on the driver: the plan scans no file, and every file Arrow
+    # opened lies in the one kept dir.
+    assert got.inputFiles() == []
+    touched = {f.split("/snap-")[1].split("/")[0] for f in opened}
     assert touched == {d[1].removeprefix("snap-")}
     # A value nowhere in the table: all three dirs bloom-skipped.
     kept, skipped = t.pruned_dirs_eq("id", 999)

@@ -318,6 +318,28 @@ class TableMachine(RuleBasedStateMachine):
         want = {k: p for k, p in state.items() if lo <= k <= hi}
         assert got == want, (lo, hi, got, want)
 
+    @precondition(lambda self: bool(self.model))
+    @rule(pick=st.floats(0, 1), key=st.floats(0, 1.2))
+    def point_read_matches_model(self, pick, key):
+        """A point read of a random key (present or absent) on a random
+        live version — served on the driver or, under deletes, scanned
+        by Spark — returns exactly the model's row, with the schema of
+        a full read of that version. Partitioned versions also go
+        through the layout prune (``read_eq_part``)."""
+        versions = sorted(self.model)
+        v = versions[int(pick * (len(versions) - 1))]
+        k = int(key * self.next_id)
+        state = self.model[v]
+        want = {k: state[k]} if k in state else {}
+        reads = [self.t.read_eq(_SPARK, "id", k, version=v)]
+        if self.t._dir_specs(self.t._manifest(v)) is not None:
+            reads.append(self.t.read_eq_part(_SPARK, "id", k, version=v))
+        schema = self.t.read(_SPARK, v).schema
+        for df in reads:
+            got = {r["id"]: r["payload"] for r in df.collect()}
+            assert got == want, (v, k, got, want)
+            assert df.schema == schema, (v, df.schema, schema)
+
     @invariant()
     def every_live_version_reads_back_exactly(self):
         for v, want in self.model.items():
