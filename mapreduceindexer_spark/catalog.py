@@ -42,6 +42,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduceindexer_spark.functions.text import WHITESPACE_CLASS
 from mapreduceindexer_spark.operators import index as ix
 from mapreduceindexer_spark.operators import search
 from mapreduceindexer_spark.sources.tables import ensure_parallelism, load_table
@@ -63,19 +64,24 @@ def register(name: str, oracle: str | None):
 # Shared oracle SQL fragments (kept in lockstep with functions/text.py).
 # ---------------------------------------------------------------------------
 
+# Whitespace runs for DuckDB's string_split_regex: Java's \s (Spark's
+# split, the reference's isspace) spelled out, because RE2's \s leaves
+# out vertical tab.
+SQL_WS = WHITESPACE_CLASS + "+"
+
 # Raw whitespace tokens, empties dropped (reference: fin >> word skips all
 # whitespace; leading-whitespace artifacts are empty strings in both
 # engines' regex split, filtered identically).
-SQL_RAW_TOKENS = r"""
+SQL_RAW_TOKENS = rf"""
   SELECT d.doc_id, t.tok
-  FROM documents d, unnest(string_split_regex(d.text, '\s+')) AS t(tok)
+  FROM documents d, unnest(string_split_regex(d.text, '{SQL_WS}')) AS t(tok)
   WHERE t.tok <> ''
 """
 
 # Normalized nonempty terms, duplicates preserved (T1+T2+F1).
-SQL_TERMS = r"""
+SQL_TERMS = rf"""
   SELECT d.doc_id, lower(regexp_replace(t.tok, '[^A-Za-z]', '', 'g')) AS term
-  FROM documents d, unnest(string_split_regex(d.text, '\s+')) AS t(tok)
+  FROM documents d, unnest(string_split_regex(d.text, '{SQL_WS}')) AS t(tok)
   WHERE lower(regexp_replace(t.tok, '[^A-Za-z]', '', 'g')) <> ''
 """
 
@@ -606,7 +612,7 @@ def q_bm25(spark, sf_dir):
     rf"""WITH tok AS (
           SELECT doc_id,
                  list_filter(
-                   list_transform(string_split_regex(text, '\s+'),
+                   list_transform(string_split_regex(text, '{SQL_WS}'),
                                   x -> lower(regexp_replace(x, '[^A-Za-z]', '', 'g'))),
                    x -> x <> '') AS tk
           FROM documents),
@@ -1268,10 +1274,10 @@ from mapreduceindexer_spark.operators import textstats as ts  # noqa: E402
 
 # Ordered token arrays and distinct 3-token shingles per document (DuckDB
 # twin of functions/text.py normalized_token_array + shingles).
-SQL_TOKARR = r"""
+SQL_TOKARR = rf"""
   SELECT doc_id,
          list_filter(
-           list_transform(string_split_regex(text, '\s+'),
+           list_transform(string_split_regex(text, '{SQL_WS}'),
                           t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))),
            t -> t <> '') AS tk
   FROM documents
@@ -1978,8 +1984,8 @@ def q_lang_id(spark, sf_dir):
 
 @register(
     "q_token_counts",
-    r"""SELECT doc_id,
-               CAST(len(list_filter(string_split_regex(text, '\s+'), t -> t <> ''))
+    rf"""SELECT doc_id,
+               CAST(len(list_filter(string_split_regex(text, '{SQL_WS}'), t -> t <> ''))
                     AS BIGINT) AS n_ws_tokens,
                CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
                     AS BIGINT) AS n_bpe_pieces
@@ -4556,7 +4562,7 @@ _PACK_BIN = 2048  # tokens per packed training sequence
     "q_context_chunks",
     f"""WITH n AS (
           SELECT doc_id,
-                 CAST(len(list_filter(string_split_regex(text, '\\s+'),
+                 CAST(len(list_filter(string_split_regex(text, '{SQL_WS}'),
                                       t -> t <> '')) AS BIGINT) AS n_tokens
           FROM documents),
         c AS (SELECT doc_id, n_tokens,
@@ -4605,7 +4611,7 @@ _PACK_SHARD = 1000  # docs per packing shard (doc_id-contiguous)
     "q_sequence_pack",
     f"""WITH n AS (
           SELECT doc_id, doc_id // {_PACK_SHARD} AS shard,
-                 CAST(len(list_filter(string_split_regex(text, '\\s+'),
+                 CAST(len(list_filter(string_split_regex(text, '{SQL_WS}'),
                                       t -> t <> '')) AS BIGINT) AS n_tokens
           FROM documents),
         o AS (SELECT doc_id, shard, n_tokens,
@@ -5411,10 +5417,10 @@ def q_waiting_suppliers(spark, sf_dir):
 
 @register(
     "q_bpe_pairs",
-    r"""WITH t AS (
+    rf"""WITH t AS (
          SELECT doc_id, unnest(arr) AS tok,
                 generate_subscripts(arr, 1) AS pos
-         FROM (SELECT doc_id, string_split_regex(text, '\s+') AS arr
+         FROM (SELECT doc_id, string_split_regex(text, '{SQL_WS}') AS arr
                FROM documents)),
        n AS (
          SELECT doc_id, pos,
@@ -6382,9 +6388,9 @@ def q_ann_batch(spark, sf_dir):
 
 @register(
     "q_lm_score",
-    r"""WITH tkl AS (
+    rf"""WITH tkl AS (
          SELECT doc_id,
-                list_filter(list_transform(string_split_regex(text, '\s+'),
+                list_filter(list_transform(string_split_regex(text, '{SQL_WS}'),
                     t -> lower(regexp_replace(t, '[^A-Za-z]', '', 'g'))),
                     t -> t <> '') AS tk
          FROM documents),
@@ -6533,17 +6539,17 @@ def _sql_bpe_apply_b(i: int) -> str:
           FROM z{i - 1}, g{i})"""
 
 
-_SQL_TERMS_EN = r"""
+_SQL_TERMS_EN = rf"""
   SELECT d.doc_id, lower(regexp_replace(t.tok, '[^A-Za-z]', '', 'g')) AS term
-  FROM documents d, unnest(string_split_regex(d.text, '\s+')) AS t(tok)
+  FROM documents d, unnest(string_split_regex(d.text, '{SQL_WS}')) AS t(tok)
   WHERE d.lang = 'en'
     AND lower(regexp_replace(t.tok, '[^A-Za-z]', '', 'g')) <> ''
 """
 
-_SQL_TERMS_NON_EN = r"""
+_SQL_TERMS_NON_EN = rf"""
   SELECT d.doc_id, d.lang,
          lower(regexp_replace(t.tok, '[^A-Za-z]', '', 'g')) AS term
-  FROM documents d, unnest(string_split_regex(d.text, '\s+')) AS t(tok)
+  FROM documents d, unnest(string_split_regex(d.text, '{SQL_WS}')) AS t(tok)
   WHERE d.lang <> 'en'
     AND lower(regexp_replace(t.tok, '[^A-Za-z]', '', 'g')) <> ''
 """
@@ -8105,9 +8111,9 @@ def q_lm_retrieval(spark, sf_dir):
 
 @register(
     "q_collation_group",
-    r"""WITH tok AS (
+    rf"""WITH tok AS (
          SELECT regexp_replace(t.tok, '[^A-Za-z]', '', 'g') AS w
-         FROM documents d, unnest(string_split_regex(d.text, '\s+')) AS t(tok)
+         FROM documents d, unnest(string_split_regex(d.text, '{SQL_WS}')) AS t(tok)
          WHERE regexp_replace(t.tok, '[^A-Za-z]', '', 'g') <> '')
        SELECT min(w) AS representative, CAST(count(*) AS BIGINT) AS n
        FROM tok GROUP BY lower(w)

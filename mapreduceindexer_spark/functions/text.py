@@ -18,6 +18,9 @@ from pyspark.sql import functions as F
 
 WHITESPACE_RE = r"\s+"
 NON_ALPHA_RE = "[^A-Za-z]"
+# Java's ``\s`` (the reference's ``isspace``) spelled out, for regex
+# engines whose ``\s`` is another set: RE2's leaves out vertical tab.
+WHITESPACE_CLASS = r"[ \t\n\x0B\f\r]"
 
 
 def tokenize(text: Column | str) -> Column:
@@ -88,3 +91,29 @@ def tokens_normalized(df: DataFrame, text_col: str = "text", doc_id_col: str = "
         .filter(F.col("term") != "")
         .select(doc_id_col, "term")
     )
+
+
+def arrow_tokens(text):
+    """Arrow twin of :func:`tokens_normalized` over one string array:
+    a table (row, term) with one entry per normalized nonempty term, in
+    order, where ``row`` is the index of its text in ``text``.
+
+    Lowercasing ASCII first and then deleting every code point outside
+    ``[a-z]`` and :data:`WHITESPACE_CLASS` leaves each whitespace-split
+    token with exactly the letters ``normalize_term`` keeps. Only those
+    six whitespace characters survive the deletion, so Arrow's ASCII
+    whitespace split cuts where Java's ``\\s`` does. The empty strings
+    the split yields for leading, trailing or emptied tokens are dropped
+    like the reference's empty terms. Null text gives no term.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    kept = pc.replace_substring_regex(
+        pc.ascii_lower(text), "[^a-z" + WHITESPACE_CLASS[1:], ""
+    )
+    split = pc.ascii_split_whitespace(kept)
+    tokens = pa.table(
+        {"row": pc.list_parent_indices(split), "term": pc.list_flatten(split)}
+    )
+    return tokens.filter(pc.not_equal(tokens["term"], ""))

@@ -66,49 +66,12 @@ def bm25_topk(
     ``score = idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))`` with the
     Lucene-style ``idf = ln((N − df + 0.5)/(df + 0.5) + 1)``.
 
-    Scale shape: ONE tokenize pass over the corpus — tf and dl come out of
-    the same per-doc aggregate (tf as a conditional count), and the
-    corpus-level stats (avgdl, df) are a second tiny aggregate over the
-    per-doc relation, not a re-scan. N comes from the documents table
-    itself (a metadata-cheap count). All counts are exact integers, so
-    scores are bit-identical across engines and partitionings.
+    The multi-term scorer with one term, keeping its ``tf`` column (see
+    :func:`bm25_multi_topk` for the two paths). Its score
+    ``round(0.0 + c, 6)`` is ``round(c, 6)``: adding 0.0 to a
+    non-negative double changes nothing.
     """
-    from mapreduceindexer_spark.functions.text import tokens_normalized
-
-    per_doc = (
-        tokens_normalized(docs)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("dl"),
-            F.count(F.when(F.col("term") == term, True)).cast("bigint").alias("tf"),
-        )
-    )
-    stats = docs.agg(F.count("*").alias("n_docs")).crossJoin(
-        per_doc.agg(
-            # Integer counts are exact; one IEEE double division.
-            (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-            F.count(F.when(F.col("tf") > 0, True)).alias("df_t"),
-        )
-    )
-    idf = F.log(
-        (F.col("n_docs") - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5) + 1.0
-    )
-    denom = F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    score = F.round(idf * F.col("tf") * (k1 + 1.0) / denom, 6)
-    # Top-k FIRST via distributed TakeOrderedAndProject (each partition
-    # surrenders at most k rows), THEN rank the k survivors — the global
-    # row_number window only ever sees k rows, never the full match set
-    # (a stopword probe at 100 TB would otherwise funnel every matching
-    # document through one partition).
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_doc.filter(F.col("tf") > 0)
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "tf", "dl", score.alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rn", F.row_number().over(w).cast("bigint"))
-    )
+    return _bm25_ranked(docs, [term], k, k1, b, keep_tf=True)
 
 
 def phrase_search(docs: DataFrame, first: str, second: str) -> DataFrame:
@@ -143,11 +106,13 @@ def top_terms(postings: DataFrame, k: int = 20) -> DataFrame:
 
 
 def _bm25_per_doc_stats(docs: DataFrame, terms: Sequence[str]):
-    """Shared BM25 preamble for the full and bound-pruned scorers: ONE
-    tokenize pass building (per_doc: doc_id, dl, tf{i}...) and the
-    single-row (stats: n_docs, avgdl, df{i}...) relation. Extracted so
-    the two scorers — whose contract is exact output EQUALITY — cannot
-    drift (round-6 review finding)."""
+    """Shared BM25 preamble of the Spark plans: (per_doc: doc_id, dl,
+    tf{i}...) from one tokenize-and-group of ``docs``, and the single-row
+    (stats: n_docs, avgdl, df{i}...) relation. Extracted so the full and
+    bound-pruned scorers — whose contract is exact output EQUALITY —
+    cannot drift (round-6 review finding). Both are plans over ``docs``,
+    not results: ``n_docs`` is a scan of its own, and a consumer of both
+    reads the per-doc shuffle once per side."""
     from mapreduceindexer_spark.functions.text import tokens_normalized
 
     aggs = [F.count("*").cast("bigint").alias("dl")]
@@ -190,30 +155,198 @@ def bm25_multi_topk(
     b: float = 0.75,
 ) -> DataFrame:
     """Multi-term BM25: per-document score summed over the query terms —
-    the standard ranked disjunctive query.
+    the standard ranked disjunctive query. (doc_id, dl, score, rn) for
+    the top-k documents, ordered by (score DESC, doc_id ASC).
 
-    Same one-tokenize-pass shape as the single-term ranker: one per-doc
-    aggregate produces dl and one conditional tf per query term (a query
-    is a handful of terms — each is a cheap conditional count in the SAME
-    aggregate, not a join); one tiny corpus-stats aggregate yields every
-    df plus avgdl. The per-term score contributions are combined in a
-    fixed expression order, so the sum is bit-deterministic. Top-k via
-    TakeOrderedAndProject, then the k survivors are ranked.
+    Two paths, one result. A corpus whose ``(doc_id, text)`` Spark
+    estimates within ``spark.sql.autoBroadcastJoinThreshold`` (the size
+    it already ships through the driver for a broadcast join; -1 turns
+    this path off), with a string ``text`` and an integral or string
+    ``doc_id``, is scored on the driver (:func:`_bm25_on_driver`): it is
+    collected once with ``toArrow``, tokenized and counted with Arrow and
+    numpy, and the top k come back as a local relation, so collecting
+    the result runs no job. Any other corpus takes the Spark plan: one
+    per-doc aggregate yields dl and one conditional tf per query term,
+    one tiny stats aggregate yields every df plus avgdl, and the top k
+    go through TakeOrderedAndProject before being ranked. That plan
+    scans the corpus twice (the tokenized per-doc aggregate and a
+    column-less count for ``n_docs``) and reads the per-doc shuffle
+    twice, once for the stats and once for scoring: about four corpus
+    reads per query. Per-term contributions are summed from 0.0 in
+    query order, so the score is bit-deterministic on both paths.
     """
+    return _bm25_ranked(docs, terms, k, k1, b, keep_tf=False)
+
+
+def _bm25_ranked(
+    docs: DataFrame,
+    terms: Sequence[str],
+    k: int,
+    k1: float,
+    b: float,
+    keep_tf: bool,
+) -> DataFrame:
+    """The shared scorer of :func:`bm25_topk` (``keep_tf``: one term,
+    whose count is returned as ``tf``) and :func:`bm25_multi_topk`."""
+    served = _bm25_on_driver(docs, terms, k, k1, b, keep_tf)
+    if served is not None:
+        return served
     per_doc, stats = _bm25_per_doc_stats(docs, terms)
     scored = per_doc.crossJoin(F.broadcast(stats))
     score = F.lit(0.0)
     for i in range(len(terms)):
         score = score + _bm25_contrib(i, k1, b)
+    tf = [F.col("tf0").alias("tf")] if keep_tf else []
     scored = scored.filter(
         sum((F.col(f"tf{i}") > 0).cast("int") for i in range(len(terms))) > 0
-    ).select("doc_id", "dl", F.round(score, 6).alias("score"))
+    ).select("doc_id", *tf, "dl", F.round(score, 6).alias("score"))
+    # Top-k FIRST via distributed TakeOrderedAndProject (each partition
+    # surrenders at most k rows), THEN rank the k survivors: the global
+    # row_number window only ever sees k rows, never the full match set.
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         scored.orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
         .withColumn("rn", F.row_number().over(w).cast("bigint"))
     )
+
+
+def _bm25_on_driver(
+    docs: DataFrame,
+    terms: Sequence[str],
+    k: int,
+    k1: float,
+    b: float,
+    keep_tf: bool,
+) -> DataFrame | None:
+    """The rows of :func:`_bm25_ranked`'s Spark plan, computed in the
+    driver process, or None when ``docs`` is not eligible (gate in
+    :func:`bm25_multi_topk`).
+
+    Exactness, step by step against the plan:
+
+    - terms: :func:`~mapreduceindexer_spark.functions.text.arrow_tokens`
+      is ``tokens_normalized`` in Arrow;
+    - groups: rows group by ``doc_id`` (duplicates merge, null is a
+      group of its own); ``n_docs`` counts every row, avgdl averages dl
+      over the groups with a term, and ``df_i`` counts the groups with
+      ``tf_i > 0``;
+    - arithmetic: the operations of :func:`_bm25_contrib` in the same
+      order on IEEE doubles, idf from the JVM's ``StrictMath.log`` (what
+      Spark's ``log`` calls) and Spark's HALF_UP rounding
+      (:func:`_round_half_up_6`);
+    - order: (score DESC, doc_id ASC, nulls first), ``rn`` from 1.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    from mapreduceindexer_spark.functions.text import arrow_tokens
+
+    if k < 0 or not terms or not all(isinstance(t, str) for t in terms):
+        return None
+    spark = docs.sparkSession
+    corpus = docs.select("doc_id", "text")
+    id_field, text_field = corpus.schema.fields
+    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    if text_field.dataType != T.StringType() or not (
+        id_field.dataType == T.StringType() or isinstance(id_field.dataType, integral)
+    ):
+        return None
+    threshold = spark._jconf.autoBroadcastJoinThreshold()
+    size = corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if threshold < 0 or int(size) > threshold:
+        return None
+
+    table = corpus.toArrow()
+    groups = pc.dictionary_encode(
+        table.column(0).combine_chunks(), null_encoding="encode"
+    )
+    tokens = arrow_tokens(table.column(1))
+    token_group = groups.indices.to_numpy()[tokens.column("row").to_numpy()]
+    n_groups = len(groups.dictionary)
+    dl = np.bincount(token_group, minlength=n_groups)
+    tfs = [
+        np.bincount(
+            token_group[pc.equal(tokens.column("term"), t).to_numpy(zero_copy_only=False)],
+            minlength=n_groups,
+        )
+        for t in terms
+    ]
+    hit = np.flatnonzero(np.logical_or.reduce([tf > 0 for tf in tfs]))
+    n_docs = table.num_rows
+    # sum(dl) and count(*) as Spark's bigints, then one double division;
+    # a corpus without a term has no hit to score.
+    avgdl = float(int(dl.sum())) / float(max(int(np.count_nonzero(dl)), 1))
+    strict_log = spark._jvm.java.lang.StrictMath.log
+    dl_hit = dl[hit].astype(np.float64)
+    score = np.zeros(len(hit))
+    for tf in tfs:
+        df_i = int(np.count_nonzero(tf))
+        idf = strict_log((float(n_docs - df_i) + 0.5) / (float(df_i) + 0.5) + 1.0)
+        tf_hit = tf[hit].astype(np.float64)
+        denom = tf_hit + k1 * ((1.0 - b) + b * dl_hit / avgdl)
+        score = score + idf * tf_hit * (k1 + 1.0) / denom
+    score = _round_half_up_6(score, spark)
+
+    ranked = pa.table(
+        {
+            id_field.name: groups.dictionary.take(pa.array(hit)),
+            **({"tf": pa.array(tfs[0][hit], pa.int64())} if keep_tf else {}),
+            "dl": pa.array(dl[hit], pa.int64()),
+            "score": pa.array(score, pa.float64()),
+        }
+    )
+    order = pc.sort_indices(
+        ranked,
+        sort_keys=[("score", "descending"), (id_field.name, "ascending")],
+        null_placement="at_start",
+    )
+    top = ranked.take(order[:k])
+    top = top.append_column("rn", pa.array(np.arange(1, top.num_rows + 1), pa.int64()))
+    schema = T.StructType(
+        [
+            id_field,
+            *([T.StructField("tf", T.LongType(), False)] if keep_tf else []),
+            T.StructField("dl", T.LongType(), False),
+            T.StructField("score", T.DoubleType(), True),
+            T.StructField("rn", T.LongType(), False),
+        ]
+    )
+    # One chunk (an empty one when nothing is hit): createDataFrame
+    # drops every row after an empty batch and rejects a table of none.
+    return spark.createDataFrame(top.combine_chunks(), schema=schema)
+
+
+def _round_half_up_6(x, spark):
+    """Spark's ``round(x, 6)`` of non-negative doubles:
+    ``BigDecimal.valueOf(x)`` — the decimal digits of JDK 17's
+    ``Double.toString`` — set to scale 6 with HALF_UP, back to a double.
+
+    Vectorized as ``floor(x·1e6 + 0.5) / 1e6``. That is exact wherever
+    ``x·1e6`` lies clearly off a half-way point: then the decimal string
+    and the binary value round to the same integer ``n``, and both
+    ``n / 1e6`` and ``BigDecimal.doubleValue`` are the double nearest to
+    ``n·10⁻⁶``. Values within a few ulps of a half-way point (where
+    JDK 17's digits may differ from Python's shortest ``repr``) and
+    values too large for an exact ``n`` are rounded by the JVM itself.
+    """
+    from decimal import ROUND_HALF_UP, Context, Decimal
+
+    import numpy as np
+
+    scaled = x * 1e6
+    out = np.floor(scaled + 0.5) / 1e6
+    frac = scaled - np.floor(scaled)
+    to_string = spark._jvm.java.lang.Double.toString
+    exact = Context(prec=400)  # every digit of any double at scale 6
+    for i in np.flatnonzero(
+        (np.abs(frac - 0.5) <= 64 * np.spacing(scaled)) | (scaled >= 2.0**52)
+    ):
+        digits = Decimal(to_string(float(x[i])))
+        out[i] = float(digits.quantize(Decimal("1e-6"), ROUND_HALF_UP, exact))
+    return out
 
 
 def prefix_search(postings: DataFrame, prefix: str) -> DataFrame:

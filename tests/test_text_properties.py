@@ -60,13 +60,42 @@ def test_postings_invariant_under_repartitioning(spark, texts):
     assert base == shuffled == single
 
 
+def _arrow_terms(docs) -> list:
+    """Sorted (doc_id, term) pairs of ``arrow_tokens`` over ``docs``."""
+    import pyarrow as pa
+
+    from mapreduceindexer_spark.functions.text import arrow_tokens
+
+    tokens = arrow_tokens(pa.array([t for _, t in docs], pa.string()))
+    return sorted(
+        (docs[row][0], term)
+        for row, term in zip(tokens["row"].to_pylist(), tokens["term"].to_pylist())
+    )
+
+
+@settings(max_examples=12, deadline=None)
+@given(TEXTS)
+def test_arrow_tokens_equal_tokens_normalized(spark, texts):
+    """The Arrow tokenizer yields each document's term multiset exactly
+    as the JVM tokenizer does, for any text."""
+    from mapreduceindexer_spark.functions.text import tokens_normalized
+
+    docs = [(i, t) for i, t in enumerate(texts)]
+    sdf = spark.createDataFrame(docs, "doc_id bigint, text string")
+    got_spark = sorted(map(tuple, tokens_normalized(sdf).collect()))
+    assert _arrow_terms(docs) == got_spark
+
+
 def test_tokenizer_lockstep_on_unicode_whitespace(spark):
     """Differential contract on NON-ASCII input: the Java tokenizer
-    (functions/text.py), and the DuckDB oracle fragment (SQL_TERMS) must
-    agree byte-for-byte on Unicode whitespace (NBSP, ideographic space,
-    line separator — \\s is the ASCII class in BOTH RE2 and Java, so
-    none of them split), accented letters, CJK, emoji, and digit-mixed
-    tokens ([^A-Za-z] strips every non-ASCII-letter codepoint). The
+    (functions/text.py), the DuckDB oracle fragment (SQL_TERMS), the
+    Python UDTF kernel and the Arrow tokenizer of the driver-side BM25
+    scorer must agree byte-for-byte on whitespace and Unicode. Java's
+    \\s is the ASCII class [ \\t\\n\\x0B\\f\\r] (the reference's
+    isspace); RE2's \\s leaves out vertical tab, so the oracle spells the
+    class out (catalog.SQL_WS). Unicode whitespace (NBSP, ideographic
+    space, line separator) splits in none of them, and [^A-Za-z] strips
+    every non-ASCII-letter codepoint: accents, CJK, emoji, digits. The
     fixture corpora are pure ASCII, so without this test an engine
     disagreement on real-world text would reach production unseen."""
     import duckdb
@@ -83,6 +112,7 @@ def test_tokenizer_lockstep_on_unicode_whitespace(spark):
         "中文 only cjk \U0001f600 emoji",
         "mixed42digits and-hyphens_under",
         "  leading trailing  ",
+        "vertical\x0btab splits\x0b\x0bin java",  # Java's \s, not RE2's
         " 　",  # whitespace-only after stripping -> no terms
     ]
     docs = [(i, t) for i, t in enumerate(texts)]
@@ -111,10 +141,14 @@ def test_tokenizer_lockstep_on_unicode_whitespace(spark):
     )
     assert got_py == got_spark, (got_py, got_spark)
 
+    # Fourth leg: the Arrow tokenizer of the driver-side BM25 scorer.
+    assert _arrow_terms(docs) == got_spark
+
     # Sanity of the contract itself: NBSP did NOT split (joined token),
     # tab DID, accents/CJK/emoji/digits stripped.
     terms0 = {t for d, t in got_spark if d == 1}
     assert "nbspjoined" in terms0 and "tab" in terms0 and "split" in terms0
+    assert {t for d, t in got_spark if d == 7} == {"vertical", "tab", "splits", "in", "java"}
     assert all(t.isascii() and t.isalpha() for _, t in got_spark)
 
 
