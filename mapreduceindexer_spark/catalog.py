@@ -3394,9 +3394,10 @@ def q_ingest_dedup(spark, sf_dir):
     them too. The query returns the dup report plus the state's doc
     count after the append; the oracle replays the whole pipeline —
     hashing, banding, census guard, agreement estimate, and the final
-    count as arithmetic. Scale: ingest cost is O(batch + bucket
-    collisions) regardless of corpus size — the 100 TB corpus is never
-    re-read; contrast q_cross_dedup, which re-hashes the reference
+    count as arithmetic. Scale: the corpus text is never re-read, but
+    the probe is O(state signatures), not O(batch): the Spark plan reads
+    the state twice and the driver path (inputs within the broadcast
+    threshold) once; contrast q_cross_dedup, which re-hashes the reference
     side each run (its own docstring says production would persist the
     signatures: THIS is that production path, state maintained
     exactly-once by the table's manifest CAS)."""

@@ -890,11 +890,22 @@ def ingest_signatures(
     an incremental ingest pipeline PERSISTS (≈ n_hashes small rows per
     document, independent of document length): new batches dedup
     against the corpus by probing this state, never by re-reading or
-    re-hashing corpus text — at 100 TB the difference between O(batch)
-    ingest and a daily full-corpus recompute. One md5 per shingle as in
+    re-hashing corpus text — at 100 TB the difference between reading
+    n_hashes small rows per stored document and a daily full-corpus
+    recompute. One md5 per shingle as in
     ``minhash_signatures``; the banding is the same expression
     ``lsh_band_signatures`` uses, so stored state and ad-hoc dedup
-    agree bit-for-bit (and the DuckDB oracle replays both)."""
+    agree bit-for-bit (and the DuckDB oracle replays both).
+
+    Two paths, one result. A ``(doc_id, text)`` that passes the
+    driver-path gate (``operators/driver.py``), with a string ``text``
+    and an integral or string ``doc_id``, is hashed in the driver
+    process (:func:`_signatures_on_driver`): one ``toArrow`` read, each
+    distinct shingle hashed once, and a local relation back. Any other
+    input takes the Spark plan below, which the driver path replays."""
+    served = _signatures_on_driver(docs, k, n_hashes, rows_per_band)
+    if served is not None:
+        return served
     mh = minhash_signatures(doc_shingles(docs, k), n_hashes)
     sigs = lsh_band_signatures(mh, rows_per_band)
     banded = mh.withColumn("band", _band_of(F.col("seed"), rows_per_band))
@@ -931,8 +942,22 @@ def ingest_dedup_against(
     stored state alone. That is the production contract: the state
     carries no shingles and no text, so exact re-verification would
     need a corpus re-read; estimator granularity is 1/n_hashes (raise
-    n_hashes for a finer gate). The estimate NEVER touches document
-    bytes — ingest cost is O(batch signatures + bucket collisions)."""
+    n_hashes for a finer gate). The estimate never touches document
+    bytes.
+
+    Two paths, one result, and both are O(state): neither yet reads only
+    the state buckets the batch touches. When both inputs pass the
+    driver-path gate (``operators/driver.py``), the probe runs in the
+    driver process (:func:`_dedup_on_driver`): each input is read once
+    with ``toArrow`` (a batch that ``ingest_signatures`` hashed on the
+    driver is not read again) and the plan is replayed in Arrow, with a
+    local relation back. Any other input takes the Spark plan below. It
+    reads the whole state twice, once for the bucket census and once
+    for the agreement join, and evaluates the batch's plan twice, so a
+    lazy batch is hashed twice."""
+    served = _dedup_on_driver(state_sigs, batch_sigs, n_hashes, threshold, max_bucket)
+    if served is not None:
+        return served
     st = state_sigs.select("doc_id", "band", "sig").distinct()
     w = Window.partitionBy("band", "sig")
     census = st.select(
@@ -980,6 +1005,210 @@ def ingest_dedup_against(
         F.count("*").cast("bigint").alias("n_matches"),
         F.round(F.max("est"), 6).alias("best_est"),
     )
+
+
+def _signatures_on_driver(
+    docs: DataFrame, k: int, n_hashes: int, rows_per_band: int
+) -> DataFrame | None:
+    """The rows of :func:`ingest_signatures`' Spark plan, computed in the
+    driver process, or None when ``docs`` is not eligible. Step by step
+    against the plan:
+
+    - terms: :func:`~mapreduceindexer_spark.functions.text.arrow_tokens`
+      is ``normalized_token_array`` in Arrow; a k-shingle starts at each
+      term followed by k - 1 more of the same text, so a text of fewer
+      than k terms (or null) gives none;
+    - documents: rows group by ``doc_id`` (duplicates merge); a null id
+      gives no row, as the plan's join on ``doc_id`` drops it;
+    - hashes: ``hash60`` is the first 60 bits of md5 of ``"0:" +
+      shingle``, taken once per distinct shingle; ``minhash_perm`` runs
+      in int64, where its products stay below 2^61;
+    - bands: ``band = seed // rows_per_band`` and ``sig`` joins the
+      band's minhash values in seed order, a short last band included.
+    """
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    from mapreduceindexer_spark.functions.hashing import (
+        _MASK30,
+        MINHASH_MOD,
+        minhash_perm_constants,
+    )
+    from mapreduceindexer_spark.functions.text import arrow_tokens
+    from mapreduceindexer_spark.operators import driver
+
+    if k < 1 or n_hashes < 1 or rows_per_band < 1:
+        return None
+    corpus = driver.small_relation(docs, doc_id=driver.is_key, text=driver.is_string)
+    table = None if corpus is None else driver.collect_small(corpus)
+    if table is None:
+        return None
+    id_field = corpus.schema.fields[0]
+
+    groups = pc.dictionary_encode(table.column(0).combine_chunks())
+    group_of_row = pc.fill_null(groups.indices, -1).to_numpy()
+    tokens = arrow_tokens(table.column(1))
+    rows = tokens.column("row").to_numpy()
+    terms = tokens.column("term")
+    n = max(len(rows) - k + 1, 0)
+    starts = np.flatnonzero(rows[k - 1 : k - 1 + n] == rows[:n])
+    group = group_of_row[rows[starts]]
+    starts, group = starts[group >= 0], group[group >= 0]
+    shingle = pc.dictionary_encode(
+        pc.binary_join_element_wise(*(terms.take(starts + j) for j in range(k)), " ")
+    ).combine_chunks()
+    distinct = shingle.dictionary.cast(pa.binary()).to_pylist()
+    h60 = np.fromiter(
+        (int.from_bytes(hashlib.md5(b"0:" + s).digest()[:8], "big") >> 4 for s in distinct),
+        np.int64,
+        count=len(distinct),
+    )
+    # One entry per distinct (document, shingle), sorted by document.
+    width = max(len(distinct), 1)
+    pair = np.unique(group.astype(np.int64) * width + shingle.indices.to_numpy())
+    group, h = pair // width, h60[pair % width]
+    first = np.flatnonzero(np.diff(group, prepend=-1))
+    lo, hi = h & _MASK30, (h >> 30) & _MASK30
+    mh = np.stack(
+        [
+            np.minimum.reduceat((a * lo + b * hi + c) % MINHASH_MOD, first)
+            for a, b, c in minhash_perm_constants(n_hashes)
+        ],
+        axis=1,
+    )  # one row per document, one column per seed
+
+    n_docs = len(first)
+    seed = np.arange(n_hashes)
+    band = seed // rows_per_band
+    mh_text = [pc.cast(pa.array(mh[:, i]), pa.string()) for i in seed]
+    sig = pa.chunked_array(
+        [
+            pc.binary_join_element_wise(*(mh_text[i] for i in seed[band == j]), ",")
+            for j in range(int(band[-1]) + 1)
+        ],
+        pa.string(),
+    )  # band-major: the sig of document d in band b is at b * n_docs + d
+    at = np.repeat(np.arange(n_docs), n_hashes)
+    seeds = np.tile(seed, n_docs)
+    out = pa.table(
+        {
+            "doc_id": groups.dictionary.take(pa.array(group[first][at])),
+            "seed": pa.array(seeds, pa.int32()),
+            "mh": pa.array(mh.reshape(-1), pa.int64()),
+            "band": pa.array(band[seeds], pa.int32()),
+            "sig": sig.take(pa.array(band[seeds] * n_docs + at)),
+        }
+    )
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", id_field.dataType, id_field.nullable),
+            T.StructField("seed", T.IntegerType(), False),
+            T.StructField("mh", T.LongType(), True),
+            T.StructField("band", T.IntegerType(), True),
+            T.StructField("sig", T.StringType(), False),
+        ]
+    )
+    return driver.local_relation(docs.sparkSession, out, schema)
+
+
+def _dedup_on_driver(
+    state_sigs: DataFrame,
+    batch_sigs: DataFrame,
+    n_hashes: int,
+    threshold: float,
+    max_bucket: int,
+) -> DataFrame | None:
+    """The rows of :func:`ingest_dedup_against`'s Spark plan, computed in
+    the driver process with Arrow, or None when an input is not
+    eligible. Each step is the plan's: distinct (doc, band, sig), the
+    census (bucket size and min doc), the star split at ``max_bucket``,
+    distinct candidate pairs, and per pair the number of (seed, mh)
+    values the two documents share over ``n_hashes``. A null in either
+    input falls back, as does a ``threshold`` of 0 or below, where the
+    plan's estimate also depends on pairs that share no seed at all."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    from mapreduceindexer_spark.operators import driver
+
+    if not (threshold > 0 and n_hashes >= 1):
+        return None
+    types = dict(
+        doc_id=driver.is_key,
+        seed=driver.is_integral,
+        mh=driver.is_integral,
+        band=driver.is_integral,
+        sig=driver.is_string,
+    )
+    # The batch first: it is usually the table ingest_signatures just
+    # built, and when it falls back the state is not read for nothing.
+    rels = [driver.small_relation(df, **types) for df in (batch_sigs, state_sigs)]
+    if None in rels:
+        return None
+    tables = []
+    for rel in rels:
+        t = driver.collect_small(rel)
+        if t is None or any(c.null_count for c in t.columns):
+            return None
+        tables.append(
+            pa.table(
+                [t.column(0), *(pc.cast(t.column(i), pa.int64()) for i in (1, 2, 3)), t.column(4)],
+                names=["doc", "seed", "mh", "band", "sig"],
+            )
+        )
+    batch, state = tables
+
+    def distinct(t, cols):
+        return t.select(cols).group_by(cols).aggregate([])
+
+    def join(a, b, keys):
+        return a.join(b, keys, join_type="inner")
+
+    st = distinct(state, ["doc", "band", "sig"])
+    census = st.group_by(["band", "sig"]).aggregate([("doc", "count"), ("doc", "min")])
+    small = join(st, census, ["band", "sig"]).filter(pc.field("doc_count") <= max_bucket)
+    large = census.filter(pc.field("doc_count") > max_bucket)
+    hubs = pa.concat_tables(
+        [
+            small.select(["doc", "band", "sig"]),
+            large.select(["doc_min", "band", "sig"]).rename_columns(["doc", "band", "sig"]),
+        ]
+    )
+    probe = distinct(batch, ["doc", "band", "sig"]).rename_columns(["new", "band", "sig"])
+    cands = distinct(join(hubs, probe, ["band", "sig"]), ["doc", "new"])
+    # Joined on (seed, mh) too: each row is one value the pair shares.
+    am = distinct(state, ["doc", "seed", "mh"])
+    bm = distinct(batch, ["doc", "seed", "mh"]).rename_columns(["new", "seed", "mh"])
+    shared = (
+        join(join(cands, am, "doc"), bm, ["new", "seed", "mh"])
+        .group_by(["doc", "new"])
+        .aggregate([("seed", "count")])
+    )
+    est = pc.divide(pc.cast(shared.column("seed_count"), pa.float64()), float(n_hashes))
+    verified = shared.append_column("est", est).filter(pc.field("est") >= threshold)
+    found = verified.group_by("new").aggregate([("doc", "count"), ("est", "max")])
+    spark = batch_sigs.sparkSession
+    out = pa.table(
+        {
+            "doc_id": found.column("new"),
+            "n_matches": found.column("doc_count"),
+            "best_est": driver.round_half_up_6(found.column("est_max").to_numpy(), spark),
+        }
+    )
+    id_field = rels[0].schema.fields[0]
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", id_field.dataType, id_field.nullable),
+            T.StructField("n_matches", T.LongType(), False),
+            T.StructField("best_est", T.DoubleType(), True),
+        ]
+    )
+    return driver.local_relation(spark, out, schema)
 
 
 def signature_agreement_pairs(

@@ -158,10 +158,10 @@ def bm25_multi_topk(
     the standard ranked disjunctive query. (doc_id, dl, score, rn) for
     the top-k documents, ordered by (score DESC, doc_id ASC).
 
-    Two paths, one result. A corpus whose ``(doc_id, text)`` Spark
-    estimates within ``spark.sql.autoBroadcastJoinThreshold`` (the size
-    it already ships through the driver for a broadcast join; -1 turns
-    this path off), with a string ``text`` and an integral or string
+    Two paths, one result. A corpus whose ``(doc_id, text)`` passes the
+    driver-path gate (``operators/driver.py``: Spark's estimate and then
+    the collected bytes within ``spark.sql.autoBroadcastJoinThreshold``,
+    -1 turns it off), with a string ``text`` and an integral or string
     ``doc_id``, is scored on the driver (:func:`_bm25_on_driver`): it is
     collected once with ``toArrow``, tokenized and counted with Arrow and
     numpy, and the top k come back as a local relation, so collecting
@@ -234,7 +234,7 @@ def _bm25_on_driver(
     - arithmetic: the operations of :func:`_bm25_contrib` in the same
       order on IEEE doubles, idf from the JVM's ``StrictMath.log`` (what
       Spark's ``log`` calls) and Spark's HALF_UP rounding
-      (:func:`_round_half_up_6`);
+      (:func:`~mapreduceindexer_spark.operators.driver.round_half_up_6`);
     - order: (score DESC, doc_id ASC, nulls first), ``rn`` from 1.
     """
     import numpy as np
@@ -243,23 +243,16 @@ def _bm25_on_driver(
     from pyspark.sql import types as T
 
     from mapreduceindexer_spark.functions.text import arrow_tokens
+    from mapreduceindexer_spark.operators import driver
 
     if k < 0 or not terms or not all(isinstance(t, str) for t in terms):
         return None
+    corpus = driver.small_relation(docs, doc_id=driver.is_key, text=driver.is_string)
+    table = None if corpus is None else driver.collect_small(corpus)
+    if table is None:
+        return None
     spark = docs.sparkSession
-    corpus = docs.select("doc_id", "text")
-    id_field, text_field = corpus.schema.fields
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    if text_field.dataType != T.StringType() or not (
-        id_field.dataType == T.StringType() or isinstance(id_field.dataType, integral)
-    ):
-        return None
-    threshold = spark._jconf.autoBroadcastJoinThreshold()
-    size = corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if threshold < 0 or int(size) > threshold:
-        return None
-
-    table = corpus.toArrow()
+    id_field = corpus.schema.fields[0]
     groups = pc.dictionary_encode(
         table.column(0).combine_chunks(), null_encoding="encode"
     )
@@ -288,7 +281,7 @@ def _bm25_on_driver(
         tf_hit = tf[hit].astype(np.float64)
         denom = tf_hit + k1 * ((1.0 - b) + b * dl_hit / avgdl)
         score = score + idf * tf_hit * (k1 + 1.0) / denom
-    score = _round_half_up_6(score, spark)
+    score = driver.round_half_up_6(score, spark)
 
     ranked = pa.table(
         {
@@ -314,39 +307,7 @@ def _bm25_on_driver(
             T.StructField("rn", T.LongType(), False),
         ]
     )
-    # One chunk (an empty one when nothing is hit): createDataFrame
-    # drops every row after an empty batch and rejects a table of none.
-    return spark.createDataFrame(top.combine_chunks(), schema=schema)
-
-
-def _round_half_up_6(x, spark):
-    """Spark's ``round(x, 6)`` of non-negative doubles:
-    ``BigDecimal.valueOf(x)`` — the decimal digits of JDK 17's
-    ``Double.toString`` — set to scale 6 with HALF_UP, back to a double.
-
-    Vectorized as ``floor(x·1e6 + 0.5) / 1e6``. That is exact wherever
-    ``x·1e6`` lies clearly off a half-way point: then the decimal string
-    and the binary value round to the same integer ``n``, and both
-    ``n / 1e6`` and ``BigDecimal.doubleValue`` are the double nearest to
-    ``n·10⁻⁶``. Values within a few ulps of a half-way point (where
-    JDK 17's digits may differ from Python's shortest ``repr``) and
-    values too large for an exact ``n`` are rounded by the JVM itself.
-    """
-    from decimal import ROUND_HALF_UP, Context, Decimal
-
-    import numpy as np
-
-    scaled = x * 1e6
-    out = np.floor(scaled + 0.5) / 1e6
-    frac = scaled - np.floor(scaled)
-    to_string = spark._jvm.java.lang.Double.toString
-    exact = Context(prec=400)  # every digit of any double at scale 6
-    for i in np.flatnonzero(
-        (np.abs(frac - 0.5) <= 64 * np.spacing(scaled)) | (scaled >= 2.0**52)
-    ):
-        digits = Decimal(to_string(float(x[i])))
-        out[i] = float(digits.quantize(Decimal("1e-6"), ROUND_HALF_UP, exact))
-    return out
+    return driver.local_relation(spark, top, schema)
 
 
 def prefix_search(postings: DataFrame, prefix: str) -> DataFrame:

@@ -10,8 +10,8 @@ Per microbatch, inside ``foreachBatch``:
 1. hash the arriving documents once (``ingest_signatures`` — minhash +
    LSH bands, ~n_hashes small rows per doc, no text retained);
 2. probe the STATE table's signatures on (band, sig) and verify by
-   minhash agreement — the corpus is never re-read, cost is O(batch +
-   bucket collisions) at any corpus size;
+   minhash agreement — the corpus text is never re-read, but the probe
+   reads the whole signature state, so its cost is O(state);
 3. ALSO dedup the batch against itself (the batch's own sigs probe the
    batch — first-doc-id wins), because two near-identical documents
    can arrive in the same microbatch before either is state;
@@ -25,7 +25,7 @@ batch N admitted (pinned by the batch-twin test in
 tests/test_streaming.py). Rejections are appended to a side table with
 the same idempotence, so the dedup decisions are themselves an
 auditable relation. Scale: this is the shape a 100 TB ingest firehose
-needs — per-batch work is independent of corpus size, the quadratic
+needs — per-batch work never touches corpus text, the quadratic
 term is band-bucket-bounded with the oversized-bucket star guard, and
 state grows by O(admitted docs × n_hashes) small rows, compactable by
 the table's own OPTIMIZE.

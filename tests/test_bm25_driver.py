@@ -187,6 +187,27 @@ def test_over_the_size_bound_falls_back(spark, docs):
         _both(spark, lambda: bm25_multi_topk(docs, ["alpha"], k=10), driver=False)
 
 
+def test_collected_bytes_over_the_threshold_fall_back(spark):
+    """Spark counts a string as 20 bytes whatever its length, so this
+    corpus is under the threshold by estimate and over it once
+    collected: the collected bytes send it to the Spark plan."""
+    from pyspark.sql import functions as F
+
+    from mapreduceindexer_spark.operators.search import bm25_multi_topk
+
+    docs = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.repeat(F.lit("alpha beta "), 30), F.col("id").cast("string")).alias("text"),
+    )
+    corpus = docs.select("doc_id", "text")
+    limit = 4096
+    assert int(corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) <= limit
+    assert corpus.toArrow().nbytes > limit
+    with _threshold(spark, limit):
+        rows = _both(spark, lambda: bm25_multi_topk(docs, ["alpha"], k=5), driver=False)
+    assert [r[0] for r in rows] == [0, 1, 2, 3, 4]
+
+
 def test_column_names_resolve_as_spark_resolves_them(spark, tmp_path):
     from mapreduceindexer_spark.operators.search import bm25_multi_topk
 
@@ -220,7 +241,7 @@ def test_half_up_rounding_matches_spark_round(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from mapreduceindexer_spark.operators.search import _round_half_up_6
+    from mapreduceindexer_spark.operators.driver import round_half_up_6
 
     rng = np.random.default_rng(7)
     halves = (rng.integers(0, 30_000_000, 300) + 0.5) / 1e6
@@ -230,4 +251,4 @@ def test_half_up_rounding_matches_spark_round(spark):
     )
     df = spark.createDataFrame([(float(v),) for v in x], "x double")
     want = [r[0] for r in df.select(F.round("x", 6)).collect()]
-    assert _round_half_up_6(x, spark).tolist() == want
+    assert round_half_up_6(x, spark).tolist() == want
