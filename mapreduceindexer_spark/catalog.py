@@ -3497,7 +3497,7 @@ def q_ingest_point(spark, sf_dir):
     unclustered across slices, so range stats prune nothing), and an
     "is this document already in the corpus?" probe for a HANDFUL of
     docs computes its sig positions driver-side and reads only the
-    dirs whose bitmaps can hold any probe sig (`pruned_dirs_eq_many`),
+    dirs whose bitmaps can hold any probe sig (`plan` with an IN list),
     then verifies by signature agreement against just those dirs —
     sound because a dir holding a probe sig is always kept (FPs only
     ADD scan cost) and a candidate doc's full signature lives in the
@@ -3556,8 +3556,9 @@ def q_ingest_point(spark, sf_dir):
         r["sig"] for r in batch_sigs.select("sig").distinct().collect()
     ]
     v = table.current_version()
-    kept, skipped = table.pruned_dirs_eq_many("sig", sig_values, version=v)
-    state_sub = table._read_dirs(spark, table._manifest(v), kept)
+    plan = table.plan({"sig": sig_values}, version=v)
+    kept, skipped = plan.kept, plan.skipped
+    state_sub = table._read_dirs(spark, plan.manifest, kept)
     dups = dd.ingest_dedup_against(
         state_sub, batch_sigs, threshold=INGEST_DEDUP_THRESHOLD
     )
@@ -10452,7 +10453,7 @@ def _three_slice_table(spark, sf_dir, prefix):
                WHERE doc_id BETWEEN p.plo AND p.phi) AS total_chars""",
 )
 def q_table_skipping(spark, sf_dir):
-    """Manifest-stats DATA SKIPPING (sources/transact.py::read_pruned),
+    """Manifest-stats DATA SKIPPING (sources/transact.py::plan/scan),
     driven end-to-end: three range-disjoint snapshot appends each record
     (rows, min, max) of doc_id in the manifest; a range predicate inside
     the first slice then scans ONE dir and skips two — decided purely
@@ -10475,12 +10476,12 @@ def q_table_skipping(spark, sf_dir):
     # from the same table state (review finding: two unpinned calls
     # could straddle a concurrent commit).
     v = table.current_version()
-    kept, skipped = table.pruned_dirs("doc_id", lo=plo, hi=phi, version=v)
+    plan = table.plan({"doc_id": (plo, phi)}, version=v)
     out = (
-        table.read_pruned(spark, "doc_id", lo=plo, hi=phi, version=v)
+        table.scan(spark, plan)
         .agg(
-            F.lit(len(kept) + len(skipped)).cast("bigint").alias("n_dirs"),
-            F.lit(len(skipped)).cast("bigint").alias("n_dirs_skipped"),
+            F.lit(len(plan.manifest["dirs"])).cast("bigint").alias("n_dirs"),
+            F.lit(len(plan.skipped)).cast("bigint").alias("n_dirs_skipped"),
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
         )
@@ -10510,8 +10511,8 @@ def q_table_skipping(spark, sf_dir):
                  AND (b.n - 1 - doc_id) >= (b.n - b.b2)) AS total_chars""",
 )
 def q_table_skipping_multi(spark, sf_dir):
-    """MULTI-COLUMN data skipping (sources/transact.py::
-    read_pruned_multi): an AND-of-ranges over two stats columns moving
+    """MULTI-COLUMN data skipping (sources/transact.py::plan over
+    two columns): an AND-of-ranges over two stats columns moving
     in OPPOSITE directions across snapshots — doc_id ascends through
     the three slices while rev = n-1-doc_id descends — so each single
     conjunct keeps TWO of the three dirs but the conjunction keeps
@@ -10551,12 +10552,12 @@ def q_table_skipping_multi(spark, sf_dir):
     )
     preds = {"doc_id": (b1, None), "rev": (n - b2, None)}
     v = table.current_version()
-    kept, skipped = table.pruned_dirs_multi(preds, version=v)
+    plan = table.plan(preds, version=v)
     out = (
-        table.read_pruned_multi(spark, preds, version=v)
+        table.scan(spark, plan)
         .agg(
-            F.lit(len(kept) + len(skipped)).cast("bigint").alias("n_dirs"),
-            F.lit(len(skipped)).cast("bigint").alias("n_dirs_skipped"),
+            F.lit(len(plan.manifest["dirs"])).cast("bigint").alias("n_dirs"),
+            F.lit(len(plan.skipped)).cast("bigint").alias("n_dirs_skipped"),
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
         )
@@ -10711,7 +10712,7 @@ def q_table_hidden_partition(spark, sf_dir):
     """HIDDEN PARTITIONING (sources/transact.py::commit_partitioned
     ``transform=``): events are published partitioned by day(ts) — the
     layout is keyed by a DERIVED day number while queries keep
-    predicating on the raw timestamp; ``read_pruned_part`` maps the
+    predicating on the raw timestamp; ``plan`` maps the
     source-column bounds through the recorded transform and skips
     whole day sub-dirs with zero data reads (the Iceberg transform
     design: no derived column in the data, no partition key in the
@@ -10732,12 +10733,12 @@ def q_table_hidden_partition(spark, sf_dir):
     table = TransactionalTable(tempfile.mkdtemp(prefix="mri_txn_hp_"))
     table.commit_partitioned(spark, ev_df, "ts", transform="day")
     lo, hi = dt.datetime(2024, 1, 11), dt.datetime(2024, 1, 21)
-    kept, skipped = table.pruned_dirs_part("ts", lo, hi)
+    plan = table.plan({"ts": (lo, hi)})
     out = (
-        table.read_pruned_part(spark, "ts", lo, hi)
+        table.scan(spark, plan)
         .agg(
-            F.lit(len(kept) + len(skipped)).cast("bigint").alias("n_dirs"),
-            F.lit(len(kept)).cast("bigint").alias("n_dirs_kept"),
+            F.lit(len(plan.manifest["dirs"])).cast("bigint").alias("n_dirs"),
+            F.lit(len(plan.kept)).cast("bigint").alias("n_dirs_kept"),
             F.count("*").cast("bigint").alias("n_rows"),
             F.round(F.sum(F.col("value").cast("decimal(38,10)")), 4)
             .cast("double")
@@ -10821,13 +10822,13 @@ def q_table_partition_evolution(spark, sf_dir):
     )
     n_specs = len(table._manifest(v2)["specs"])
     lo, hi = dt.datetime(2024, 1, 6), dt.datetime(2024, 1, 12)
-    kept, skipped = table.pruned_dirs_part("ts", lo, hi)
+    plan = table.plan({"ts": (lo, hi)})
     out = (
-        table.read_pruned_part(spark, "ts", lo, hi)
+        table.scan(spark, plan)
         .agg(
             F.lit(n_specs).cast("bigint").alias("n_specs"),
-            F.lit(len(kept) + len(skipped)).cast("bigint").alias("n_dirs"),
-            F.lit(len(kept)).cast("bigint").alias("n_dirs_kept"),
+            F.lit(len(plan.manifest["dirs"])).cast("bigint").alias("n_dirs"),
+            F.lit(len(plan.kept)).cast("bigint").alias("n_dirs_kept"),
             F.count("*").cast("bigint").alias("n_rows"),
             F.round(F.sum(F.col("value").cast("decimal(38,10)")), 4)
             .cast("double")
@@ -10858,7 +10859,7 @@ def q_table_partition_evolution(spark, sf_dir):
 )
 def q_table_bucket_partition(spark, sf_dir):
     """BUCKET-TRANSFORM layout + point-lookup pruning
-    (sources/transact.py::pruned_dirs_part_eq): documents are published
+    (sources/transact.py::plan/scan): documents are published
     under bucket[8](doc_id) — the portable 60-bit hash keys the layout,
     so a point lookup computes the probe's bucket DRIVER-side and scans
     exactly one sub-dir; the other seven are skipped by arithmetic, no
@@ -10879,12 +10880,12 @@ def q_table_bucket_partition(spark, sf_dir):
     probe = n // 2
     table = TransactionalTable(tempfile.mkdtemp(prefix="mri_txn_bp_"))
     table.commit_partitioned(spark, docs, "doc_id", transform="bucket[8]")
-    kept, skipped = table.pruned_dirs_part_eq("doc_id", probe)
+    plan = table.plan({"doc_id": [probe]})
     out = (
-        table.read_eq_part(spark, "doc_id", probe)
+        table.scan(spark, plan)
         .agg(
-            F.lit(len(kept) + len(skipped)).cast("bigint").alias("n_dirs"),
-            F.lit(len(kept)).cast("bigint").alias("n_dirs_scanned"),
+            F.lit(len(plan.manifest["dirs"])).cast("bigint").alias("n_dirs"),
+            F.lit(len(plan.kept)).cast("bigint").alias("n_dirs_scanned"),
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
         )
@@ -11078,12 +11079,13 @@ def q_term_serving_table(spark, sf_dir):
         .collect()
     )
     ta, tb = top2[0][0], top2[1][0]
-    kept_a, skip_a = table.pruned_dirs_part_eq("term", ta)
-    kept_b, _ = table.pruned_dirs_part_eq("term", tb)
-    da = table.read_eq_part(spark, "term", ta).select(
+    plan_a = table.plan({"term": [ta]})
+    plan_b = table.plan({"term": [tb]})
+    kept_a, skip_a, kept_b = plan_a.kept, plan_a.skipped, plan_b.kept
+    da = table.scan(spark, plan_a).select(
         F.explode("doc_ids").alias("doc_id")
     )
-    db = table.read_eq_part(spark, "term", tb).select(
+    db = table.scan(spark, plan_b).select(
         F.explode("doc_ids").alias("doc_id")
     )
     out = (
@@ -11714,7 +11716,7 @@ def q_table_zorder(spark, sf_dir):
     rewritten as 64 Morton-bucket sub-dirs with per-bucket min/max
     stats on BOTH (l_orderkey, l_partkey) — every bucket's extent is a
     bounded rectangle, so a compound rectangle predicate
-    (pruned_dirs_multi) prunes ~all non-matching buckets where a
+    (plan over both columns) prunes ~all non-matching buckets where a
     single-axis clustering could only bound one dimension. The grid is
     deterministic equal-width (exact integer scaling + interleave, no
     sampled boundaries), so the oracle replays every bucket id, every
@@ -11744,12 +11746,12 @@ def q_table_zorder(spark, sf_dir):
         spark, "l_orderkey", "l_partkey", n_bucket_bits=6
     )
     preds = {"l_orderkey": (xlo, xhi), "l_partkey": (ylo, yhi)}
-    kept, skipped = table.pruned_dirs_multi(preds, version=v)
+    plan = table.plan(preds, version=v)
     out = (
-        table.read_pruned_multi(spark, preds, version=v)
+        table.scan(spark, plan)
         .agg(
-            F.lit(len(kept) + len(skipped)).cast("bigint").alias("n_dirs"),
-            F.lit(len(skipped)).cast("bigint").alias("n_dirs_skipped"),
+            F.lit(len(plan.manifest["dirs"])).cast("bigint").alias("n_dirs"),
+            F.lit(len(plan.skipped)).cast("bigint").alias("n_dirs_skipped"),
             F.count("*").cast("bigint").alias("n_rows"),
             F.sum(F.col("l_orderkey").cast("bigint")).alias("sum_x"),
             F.sum(F.col("l_partkey").cast("bigint")).alias("sum_y"),
@@ -12149,15 +12151,16 @@ def q_table_analyze(spark, sf_dir):
         stats_cols=["doc_id"],
     )
     plo, phi = b2 + (n - b2) // 2, n - 1  # interior of slice 3
-    kept_before, _ = table.pruned_dirs("doc_id", lo=plo, hi=phi)
+    where = {"doc_id": (plo, phi)}
+    kept_before = table.plan(where).kept
     v = table.analyze(spark, stats_cols=["doc_id"])
-    kept_after, _ = table.pruned_dirs("doc_id", lo=plo, hi=phi)
+    plan = table.plan(where)
     analyzed = table.meta_of(v)["analyzed_dirs"]
     out = (
-        table.read_pruned(spark, "doc_id", lo=plo, hi=phi)
+        table.scan(spark, plan)
         .agg(
             F.lit(len(kept_before)).cast("bigint").alias("scanned_before"),
-            F.lit(len(kept_after)).cast("bigint").alias("scanned_after"),
+            F.lit(len(plan.kept)).cast("bigint").alias("scanned_after"),
             F.lit(analyzed).cast("bigint").alias("analyzed_dirs"),
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
@@ -12220,7 +12223,8 @@ def q_table_clone(spark, sf_dir):
     )
     # Post-clone divergence on the SOURCE: invisible to the clone.
     table.commit(docs.filter(F.col("doc_id") < 5), mode="append")
-    kept, skipped = clone.pruned_dirs("doc_id", lo=b1, hi=b2 - 1)
+    plan = clone.plan({"doc_id": (b1, b2 - 1)})
+    kept, skipped = plan.kept, plan.skipped
     clone_v1_rows = clone.read(spark, 1).count()
     src_head_rows = table.read(spark).count()
     out = (
@@ -12669,12 +12673,12 @@ def q_table_cluster(spark, sf_dir):
         spark, "doc_id", n_buckets=3, stats_cols=["doc_id"]
     )
     plo, phi = n // 12, n // 6
-    kept, skipped = table.pruned_dirs("doc_id", lo=plo, hi=phi, version=v)
+    plan = table.plan({"doc_id": (plo, phi)}, version=v)
     out = (
-        table.read_pruned(spark, "doc_id", lo=plo, hi=phi, version=v)
+        table.scan(spark, plan)
         .agg(
-            F.lit(len(kept) + len(skipped)).cast("bigint").alias("n_dirs"),
-            F.lit(len(skipped)).cast("bigint").alias("n_dirs_skipped"),
+            F.lit(len(plan.manifest["dirs"])).cast("bigint").alias("n_dirs"),
+            F.lit(len(plan.skipped)).cast("bigint").alias("n_dirs_skipped"),
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
         )
@@ -12711,8 +12715,8 @@ _BLOOM_PROBE_IDS = (7, 11)  # 7 % 3 == 1, 11 % 3 == 2: two distinct slices
                WHERE doc_id IN {_BLOOM_PROBE_IDS}) AS total_chars""",
 )
 def q_table_bloom_skip_many(spark, sf_dir):
-    """BATCHED Bloom point lookup (sources/transact.py::read_eq_many /
-    pruned_dirs_eq_many — the serving layer's multi-get): same
+    """BATCHED Bloom point lookup (sources/transact.py::plan with an IN
+    list — the serving layer's multi-get): same
     unclustered mod-3 fixture as q_table_bloom_skip, probed with TWO
     ids living in different slices. The whole probe set resolves the
     manifest ONCE; a dir is scanned iff ANY probe's 5 driver-side bit
@@ -12741,17 +12745,17 @@ def q_table_bloom_skip_many(spark, sf_dir):
     # no-op for every probe (same fixture guarantee + assert as the
     # single-probe query).
     for pid in _BLOOM_PROBE_IDS:
-        kept_range, _ = table.pruned_dirs("doc_id", lo=pid, hi=pid)
+        kept_range = table.plan({"doc_id": (pid, pid)}).kept
         assert len(kept_range) == 3, (
             f"bloom-skip fixture assumption broken: range stats pruned "
             f"{3 - len(kept_range)} dirs for probe {pid}"
         )
-    kept, skipped = table.pruned_dirs_eq_many("doc_id", _BLOOM_PROBE_IDS)
+    plan = table.plan({"doc_id": list(_BLOOM_PROBE_IDS)})
     out = (
-        table.read_eq_many(spark, "doc_id", list(_BLOOM_PROBE_IDS))
+        table.scan(spark, plan)
         .agg(
-            F.lit(len(kept) + len(skipped)).cast("bigint").alias("n_dirs"),
-            F.lit(len(kept)).cast("bigint").alias("n_dirs_scanned"),
+            F.lit(len(plan.manifest["dirs"])).cast("bigint").alias("n_dirs"),
+            F.lit(len(plan.kept)).cast("bigint").alias("n_dirs_scanned"),
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
         )
@@ -12783,7 +12787,7 @@ def q_table_bloom_skip_many(spark, sf_dir):
 )
 def q_table_bloom_skip(spark, sf_dir):
     """BLOOM file skipping for POINT lookups
-    (sources/transact.py::read_eq): three snapshots split by doc_id % 3
+    (sources/transact.py::plan/scan): three snapshots split by doc_id % 3
     — the UNCLUSTERED case where every snapshot's [min, max] spans the
     whole id domain and range stats prune nothing — each committing a
     1 KiB Bloom bitmap (k=5 portable hashes over distinct string-cast
@@ -12815,19 +12819,19 @@ def q_table_bloom_skip(spark, sf_dir):
     # any corpus with > 3·probe_id rows. Assert it, so a future probe
     # or fixture change fails loudly instead of desyncing the oracle
     # (review finding).
-    kept_range, _ = table.pruned_dirs(
-        "doc_id", lo=_BLOOM_PROBE_ID, hi=_BLOOM_PROBE_ID
-    )
+    kept_range = table.plan(
+        {"doc_id": (_BLOOM_PROBE_ID, _BLOOM_PROBE_ID)}
+    ).kept
     assert len(kept_range) == 3, (
         f"bloom-skip fixture assumption broken: range stats pruned "
         f"{3 - len(kept_range)} dirs for probe {_BLOOM_PROBE_ID}"
     )
-    kept, skipped = table.pruned_dirs_eq("doc_id", _BLOOM_PROBE_ID)
+    plan = table.plan({"doc_id": [_BLOOM_PROBE_ID]})
     out = (
-        table.read_eq(spark, "doc_id", _BLOOM_PROBE_ID)
+        table.scan(spark, plan)
         .agg(
-            F.lit(len(kept) + len(skipped)).cast("bigint").alias("n_dirs"),
-            F.lit(len(kept)).cast("bigint").alias("n_dirs_scanned"),
+            F.lit(len(plan.manifest["dirs"])).cast("bigint").alias("n_dirs"),
+            F.lit(len(plan.kept)).cast("bigint").alias("n_dirs_scanned"),
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
         )

@@ -1722,13 +1722,15 @@ def ann_graph_search_vectors_table(
     ranking, per-probe sound fallback via ``_filtered_visited_rank``)
     — storage, pruning, and filtering stack without touching the walk.
     Each hop fetches only the frontier's adjacency: the frontier ids
-    (bounded by |probes| x ef) drive ``pruned_dirs_eq`` point lookups,
-    so the scan touches only snapshot dirs whose min/max range AND
-    Bloom bitmap can hold a frontier node — at scale, O(frontier)
-    dirs out of an arbitrarily large index. Results are identical to
-    the staged-relation walk (same ``_graph_beam_walk``, same edge
-    rows; pinned by tests/test_similarity_serving.py)."""
+    (bounded by |probes| x ef) drive IN-list point reads (``scan`` of
+    a plan over the pinned manifest), so the scan touches only snapshot
+    dirs whose min/max range AND Bloom bitmap can hold a frontier
+    node — at scale, O(frontier) dirs out of an arbitrarily large
+    index. Results are identical to the staged-relation walk (same
+    ``_graph_beam_walk``, same edge rows; pinned by
+    tests/test_similarity_serving.py)."""
     from mapreduceindexer_spark.functions.vector import l2_norm
+    from mapreduceindexer_spark.sources.transact import ScanPlan
 
     if version is None:
         version = table.current_version()
@@ -1742,10 +1744,10 @@ def ann_graph_search_vectors_table(
     manifest = table._manifest(version)
 
     def edges_for(ids):
-        ids = [int(v) for v in ids]
-        kept, _ = table._eq_prune_many(manifest, "vec_id", ids)
-        return table._point_read(
-            spark, manifest, kept, "vec_id", ids, many=True
+        where = {"vec_id": [int(v) for v in ids]}
+        kept, skipped = table._prune(manifest, where)
+        return table.scan(
+            spark, ScanPlan(version, manifest, where, kept, skipped)
         )
 
     probes = query_vectors.select(

@@ -46,6 +46,7 @@ own schema — type changes raise).
 
 from __future__ import annotations
 
+import datetime
 import json
 import logging
 import os
@@ -53,6 +54,7 @@ import re
 import shutil
 import time
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -144,9 +146,9 @@ def _snapshot_bloom(snap_df: DataFrame, cols: list[str]) -> dict:
     string; NULLs excluded — equality never matches NULL), OR-ed into a
     BLOOM_BITS-bit bitmap stored as hex. The distinct-position relation
     is bounded by BLOOM_BITS rows, so the collect is a bounded scalar
-    fetch. Point lookups (``pruned_dirs_eq``) then skip snapshots whose
-    bitmap lacks any of the probe's k bits — the skipping min/max stats
-    cannot do when the key is unclustered across snapshots."""
+    fetch. Point lookups (``plan`` with an IN list) then skip snapshots
+    whose bitmap lacks any of the probe's k bits — the skipping min/max
+    stats cannot do when the key is unclustered across snapshots."""
     from pyspark.sql import functions as F
 
     from mapreduceindexer_spark.functions.hashing import hash60
@@ -183,11 +185,24 @@ def _snapshot_bloom(snap_df: DataFrame, cols: list[str]) -> dict:
 
 # Spark column types whose CAST(col AS STRING) is character-identical
 # to Python's str() of the corresponding probe type — the only pairs
-# for which bloom bit positions computed driver-side line up with the
-# bits the snapshot wrote.
+# for which bloom bit positions or a bucket key computed driver-side
+# line up with what the snapshot wrote, by simple type string (what a
+# Bloom entry records as its "type").
 _BLOOM_SOUND_TYPES = {
     int: {"tinyint", "smallint", "int", "bigint"},
     str: {"string"},
+}
+# The recorded schema's JSON type names that differ from the simple
+# type string (every other JSON name is its own simple string).
+_JSON_TO_SIMPLE_TYPE = {
+    "byte": "tinyint", "short": "smallint", "integer": "int", "long": "bigint"
+}
+# Temporal column types, whose min/max stats ride the manifest as ISO
+# text (``_json_stat``), with the parser of that ISO form.
+_ISO_PARSERS = {
+    "date": datetime.date.fromisoformat,
+    "timestamp": datetime.datetime.fromisoformat,
+    "timestamp_ntz": datetime.datetime.fromisoformat,
 }
 
 # Point reads served on the driver (``_point_read``): key column types
@@ -351,6 +366,24 @@ def _constraint_error(bad: dict, constraints: dict, what: str) -> ValueError:
             f"{n!r} ({c} rows): {constraints[n]}" for n, c in bad.items()
         )
     )
+
+
+def _carried_layout(manifest: dict) -> tuple[dict, dict]:
+    """(meta entries, top-level entries) of ``manifest``'s partition
+    layout, for a commit that carries its dirs VERBATIM (a DV or
+    equality delete, a restore). The transform and the per-dir spec
+    index must travel with the dirs they describe: a bare
+    ``partitioned_by`` would read as identity keys and make layout
+    pruning skip live rows of a bucket or truncate layout."""
+    meta = {
+        k: manifest["meta"][k]
+        for k in ("partitioned_by", "partition_transform")
+        if manifest.get("meta", {}).get(k)
+    }
+    top = {}
+    if manifest.get("specs"):
+        top = {"specs": manifest["specs"], "dir_spec": manifest["dir_spec"]}
+    return meta, top
 
 
 def _carry_dv(manifest: dict, dirs) -> dict:
@@ -829,6 +862,49 @@ _REF_NAME_RE = r"^[A-Za-z0-9_\-]{1,64}$"
 _GUARD_NS = "__cvg_"
 
 
+@dataclass(frozen=True)
+class ScanPlan:
+    """A read of one table version decided from its manifest
+    (``TransactionalTable.plan``): ``kept`` and ``skipped`` partition
+    ``manifest["dirs"]``, and ``TransactionalTable.scan`` reads the kept
+    dirs with the residual ``where`` filter without reading the
+    manifest again."""
+
+    version: int
+    manifest: dict
+    where: dict
+    kept: list[str]
+    skipped: list[str]
+
+
+def _disjoint(cmin, cmax, lo, hi) -> bool:
+    """Whether [cmin, cmax] provably misses [lo, hi] (a None bound is
+    open). Values that do not order against each other prove nothing."""
+    try:
+        return (hi is not None and cmin > hi) or (lo is not None and cmax < lo)
+    except TypeError:
+        return False
+
+
+def _filtered(df: DataFrame, where: dict) -> DataFrame:
+    """``df`` filtered on a ``plan`` predicate: the residual that turns
+    every pruning false positive into scan cost, never a wrong row."""
+    from pyspark.sql import functions as F
+
+    for col, pred in where.items():
+        c = F.col(col)
+        if isinstance(pred, list):
+            one = len(pred) == 1
+            df = df.filter(c == F.lit(pred[0]) if one else c.isin(pred))
+            continue
+        lo, hi = pred
+        if lo is not None:
+            df = df.filter(c >= F.lit(lo))
+        if hi is not None:
+            df = df.filter(c <= F.lit(hi))
+    return df
+
+
 class TransactionalTable:
     """A versioned parquet table rooted at ``path`` (local or any
     fuse-mounted filesystem with atomic link/rename semantics).
@@ -917,7 +993,7 @@ class TransactionalTable:
 
         ``stats_cols`` opts the commit into DATA-SKIPPING statistics:
         per snapshot dir, (row count, min, max) of each listed column is
-        recorded in the manifest, and ``read_pruned`` skips whole dirs
+        recorded in the manifest, and ``plan`` skips whole dirs
         whose [min, max] cannot intersect a range predicate — the
         file-level skipping of Delta/Iceberg, at dir granularity. Stats
         are computed from the snapshot AS WRITTEN (one footer-friendly
@@ -930,9 +1006,9 @@ class TransactionalTable:
         ``bloom_cols`` additionally records a BLOOM_BITS-bit Bloom
         bitmap per listed column (k=BLOOM_K portable hashes over the
         snapshot's distinct values, cast to string): point lookups
-        (``read_eq``) then skip snapshots the bitmap proves cannot
-        contain the value — which min/max ranges cannot do when the key
-        is UNCLUSTERED across snapshots. ~1 KiB of manifest per
+        (``plan`` with an IN list) then skip snapshots the bitmap proves
+        cannot contain the value — which min/max ranges cannot do when
+        the key is UNCLUSTERED across snapshots. ~1 KiB of manifest per
         (snapshot, column); false positives only cost a scan, never
         correctness.
 
@@ -1108,14 +1184,7 @@ class TransactionalTable:
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """The table AS OF ``version`` (default: latest). Raises if the
         table has no commits or the version does not exist."""
-        if version is None:
-            version = self.current_version()
-        if version < 1 or version not in self.versions():
-            raise ValueError(
-                f"version {version} does not exist "
-                f"(available: {self.versions() or 'none'})"
-            )
-        manifest = self._manifest(version)
+        manifest = self._manifest(self._resolve(version))
         return self._read_dirs(spark, manifest, manifest["dirs"])
 
     def _read_dirs(
@@ -1304,29 +1373,20 @@ class TransactionalTable:
         kept,
         col: str,
         values: list,
-        many: bool,
     ) -> DataFrame:
-        """The rows of ``manifest``'s ``kept`` dirs with ``col =
-        values[0]`` (``many``: ``col IN values``) — the shared tail of
-        every point read. A slice the driver can serve exactly
-        (``_driver_files``) is read with ``pyarrow.dataset`` and handed
-        back as a local relation, so collecting it launches no Spark
-        job. Anything else is the ``_read_dirs`` scan plus the residual
-        filter, which turns a Bloom false positive into scan cost, never
-        a wrong row. An empty ``kept`` gives no row, with the version's
-        schema, on either path."""
-        from pyspark.sql import functions as F
-
+        """The rows of ``manifest``'s ``kept`` dirs with ``col IN
+        values`` (equality for one value): ``scan``'s point read. A
+        slice the driver can serve exactly (``_driver_files``) is read
+        with ``pyarrow.dataset`` and handed back as a local relation,
+        so collecting it launches no Spark job. Anything else is the
+        ``_read_dirs`` scan plus the residual filter, which turns a
+        Bloom false positive into scan cost, never a wrong row. An
+        empty ``kept`` gives no row, with the version's schema, on
+        either path."""
         served = self._driver_files(spark, manifest, kept, col, values)
         if served is None:
-            if kept:
-                df = self._read_dirs(spark, manifest, kept)
-            else:
-                df = self._read_dirs(spark, manifest, manifest["dirs"])
-                df = df.limit(0)
-            key = F.col(col)
-            return df.filter(
-                key.isin(values) if many else key == F.lit(values[0])
+            return _filtered(
+                self._read_kept(spark, manifest, kept), {col: values}
             )
         import pyarrow as pa
         import pyarrow.dataset as ds
@@ -1345,9 +1405,9 @@ class TransactionalTable:
             # One chunk: createDataFrame drops every row after the first
             # empty record batch, and each file the filter emptied is one.
             table = dataset.to_table(
-                filter=key.isin(pa.array(values, key_type))
-                if many
-                else key == pa.scalar(values[0], key_type)
+                filter=key == pa.scalar(values[0], key_type)
+                if len(values) == 1
+                else key.isin(pa.array(values, key_type))
             ).combine_chunks()
         return spark.createDataFrame(table, schema=schema)
 
@@ -1401,99 +1461,213 @@ class TransactionalTable:
 
         return _as_nullable(StructType.fromJson(sj)), sorted(files)
 
-    def pruned_dirs(
-        self,
-        col: str,
-        lo=None,
-        hi=None,
-        version: int | None = None,
-    ) -> tuple[list[str], list[str]]:
-        """(kept, skipped) snapshot dir names for a range predicate
-        ``lo <= col <= hi`` (either bound may be None = unbounded),
-        decided purely from manifest stats — zero data reads. A dir is
-        skipped only when its recorded [min, max] PROVES no row can
-        match: max < lo, min > hi, or the snapshot is empty/all-null on
-        ``col`` (range predicates never match NULL). Dirs without stats
-        for ``col`` are always kept — skipping is sound, never lossy.
-        At least one bound is required: with no predicate there is
-        nothing to prune (an unbounded read is just ``read``, and
-        skipping all-NULL snapshots would wrongly drop their rows)."""
-        if lo is None and hi is None:
-            raise ValueError(
-                "pruned_dirs needs at least one bound; an unbounded "
-                "read is read()"
-            )
+    # -- scan planning ------------------------------------------------------
+
+    def _resolve(self, version: int | None) -> int:
+        """``version`` (default: the latest), checked to exist."""
+        vs = self.versions()
         if version is None:
-            version = self.current_version()
-        if version < 1 or version not in self.versions():
+            version = vs[-1] if vs else 0
+        if version < 1 or version not in vs:
             raise ValueError(
                 f"version {version} does not exist "
-                f"(available: {self.versions() or 'none'})"
+                f"(available: {vs or 'none'})"
             )
+        return version
+
+    def plan(self, where: dict, version: int | None = None) -> ScanPlan:
+        """Which snapshot dirs of ``version`` (default: latest) can hold
+        a row matching ``where``, decided from the manifest alone: zero
+        data reads. ``where`` maps a column to a closed range ``(lo,
+        hi)``, either side None but not both, or to a list of int/str
+        values meaning IN (``[v]`` is equality); columns combine with
+        AND. ``scan`` reads the plan without reading the manifest
+        again."""
+        version = self._resolve(version)
         manifest = self._manifest(version)
-        return self._range_prune(manifest, col, lo, hi)
+        kept, skipped = self._prune(manifest, where)
+        return ScanPlan(version, manifest, where, kept, skipped)
 
     @staticmethod
-    def _range_prune(
-        manifest: dict, col: str, lo, hi
+    def _check_eq_probe(value) -> None:
+        if value is None:
+            raise ValueError("equality never matches NULL; nothing to look up")
+        if isinstance(value, bool) or not isinstance(value, (int, str)):
+            raise TypeError(
+                f"point-lookup key must be int or str (got "
+                f"{type(value).__name__}); other types' str() diverges "
+                "from Spark's string cast and would make bloom and bucket "
+                "skipping unsound"
+            )
+
+    def _prune(
+        self, manifest: dict, where: dict
     ) -> tuple[list[str], list[str]]:
-        """The stats-only range decision over ONE already-resolved
-        manifest — shared by ``pruned_dirs`` and ``pruned_dirs_multi``
-        so a compound predicate reads/validates the manifest once, not
-        once per column (advisor finding)."""
+        """(kept, skipped) dirs of ONE resolved manifest for ``where``,
+        both in manifest order. A dir is skipped only when a recorded
+        proof rules out every row for one column (AND); an IN list keeps
+        a dir if any of its values may be there (OR). The proofs:
+
+        - the layout key in the dir's name, when that dir's own spec
+          keys the column, so evolved layouts prune under each dir's
+          transform; the NULL partition never matches. ``bucket`` is not
+          monotone, so it decides IN only, and only when ``str(v)``
+          renders like Spark's string cast of the column type (the
+          Bloom rule: ``'7'`` on a bigint key keeps every bucket).
+        - min/max stats; an empty or all-NULL dir never matches, and a
+          value that does not order against the stats proves nothing.
+        - the Bloom bitmap, for IN, under ``_BLOOM_SOUND_TYPES``.
+
+        On a date or timestamp column, whose stats are ISO text, a value
+        proves nothing unless it renders as that type's own ISO form
+        (``"2024-1-5"`` or a datetime on a date column keeps every dir).
+        Dirs without any of these records are always kept. IN values
+        must be int or str (``_check_eq_probe``); a range needs a
+        bound, since an unbounded read is ``read`` (skipping all-NULL
+        dirs would drop their rows)."""
+        if not where:
+            raise ValueError(
+                "a scan plan needs at least one predicate; an unfiltered "
+                "read is read()"
+            )
+        for col, pred in where.items():
+            if isinstance(pred, list):
+                for v in pred:
+                    self._check_eq_probe(v)
+            elif not (isinstance(pred, tuple) and len(pred) == 2):
+                raise TypeError(
+                    f"predicate on {col!r} must be a list (IN) or a "
+                    f"(lo, hi) tuple (range), got {type(pred).__name__}"
+                )
+            elif pred[0] is None and pred[1] is None:
+                raise ValueError(
+                    f"predicate on {col!r} bounds neither side; a range "
+                    "needs at least one bound (an unbounded read is read())"
+                )
         stats = manifest.get("stats", {})
-        lo_j = _json_stat(lo) if lo is not None else None
-        hi_j = _json_stat(hi) if hi is not None else None
+        specs = self._dir_specs(manifest) or {}
+        types = {
+            f["name"]: _JSON_TO_SIMPLE_TYPE.get(f["type"], f["type"])
+            for f in manifest.get("schema", {}).get("fields", [])
+            if isinstance(f["type"], str)
+        }
+        positions: dict[tuple, list[int]] = {}
+
+        def renders(v, col_type) -> bool:
+            return col_type in _BLOOM_SOUND_TYPES.get(type(v), ())
+
+        def provable(v, col: str) -> bool:
+            # Whether v compares against col's stats and layout keys as
+            # Spark compares it: on a temporal column only a naive value
+            # in the column type's own ISO form does.
+            parse = _ISO_PARSERS.get(types.get(col))
+            if parse is None or v is None:
+                return True
+            try:
+                iso = _json_stat(v)
+                parsed = parse(iso)
+            except (TypeError, ValueError):
+                return False
+            return parsed.isoformat() == iso and getattr(
+                parsed, "tzinfo", None
+            ) is None
+
+        def key_of(v, kind: str, param, col: str):
+            # The partition key of value v, None when it is not provable
+            # (None also leaves a range side open).
+            if v is None or (
+                kind == "bucket" and not renders(v, types.get(col))
+            ):
+                return None
+            try:
+                return self._transform_key_py(v, kind, param)
+            except (TypeError, ValueError, AttributeError):
+                return None
+
+        def in_bloom(v, bl: dict) -> bool:
+            if not renders(v, bl.get("type")):
+                return True
+            k, bits = bl["k"], bl["bits"]
+            if (v, k, bits) not in positions:
+                positions[(v, k, bits)] = [
+                    hash60_py(str(v), i) % bits for i in range(k)
+                ]
+            bm = int(bl["hex"], 16)
+            return all((bm >> p) & 1 for p in positions[(v, k, bits)])
+
+        def may_match(d: str, col: str, pred) -> bool:
+            entry = stats.get(d, {})
+            cs = entry.get("cols", {}).get(col)
+            if cs is not None and cs[0] is None:
+                return False  # empty or all-NULL: nothing matches NULL
+            spec = specs.get(d)
+            kind = None
+            if spec is not None and spec["col"] == col:
+                key = self._dir_key(d)
+                if key is None:
+                    return False  # the NULL partition
+                kind, param, _ = self._parse_transform(spec["transform"])
+            if isinstance(pred, list):
+                bl = entry.get("bloom", {}).get(col)
+
+                def value_may_match(v) -> bool:
+                    if not provable(v, col):
+                        return True
+                    if kind is not None:
+                        kv = key_of(v, kind, param, col)
+                        if _disjoint(key, key, kv, kv):
+                            return False
+                    vj = _json_stat(v)
+                    if cs is not None and _disjoint(*cs, vj, vj):
+                        return False
+                    return bl is None or in_bloom(v, bl)
+
+                return any(value_may_match(v) for v in pred)
+            lo, hi = (b if provable(b, col) else None for b in pred)
+            if kind is not None and kind != "bucket" and _disjoint(
+                key, key, key_of(lo, kind, param, col),
+                key_of(hi, kind, param, col),
+            ):
+                return False
+            return cs is None or not _disjoint(
+                *cs, _json_stat(lo), _json_stat(hi)
+            )
+
         kept, skipped = [], []
         for d in manifest["dirs"]:
-            cs = stats.get(d, {}).get("cols", {}).get(col)
-            if cs is None:
+            if all(may_match(d, c, p) for c, p in where.items()):
                 kept.append(d)
-                continue
-            cmin, cmax = cs
-            if (
-                cmin is None  # empty or all-NULL snapshot: nothing matches
-                or (hi_j is not None and cmin > hi_j)
-                or (lo_j is not None and cmax < lo_j)
-            ):
-                skipped.append(d)
             else:
-                kept.append(d)
+                skipped.append(d)
         return kept, skipped
 
-    def read_pruned(
-        self,
-        spark: SparkSession,
-        col: str,
-        lo=None,
-        hi=None,
-        version: int | None = None,
-    ) -> DataFrame:
-        """The rows of ``version`` satisfying ``lo <= col <= hi``,
-        scanning only the snapshot dirs whose manifest stats can
-        intersect the range (``pruned_dirs``). The residual filter is
-        still applied, so pruning is purely a scan-cost optimization —
-        results are identical to filtering a full read, while the scan
-        touches O(matching dirs) instead of O(all dirs). At 100 TB this
-        is the difference between reading one day's snapshot and the
-        whole table for a time-ranged query. At least one bound is
-        required (``pruned_dirs``'s contract)."""
-        from pyspark.sql import functions as F
+    def scan(self, spark: SparkSession, plan: ScanPlan) -> DataFrame:
+        """The rows of ``plan.version`` matching ``plan.where``, reading
+        only ``plan.kept``: identical to filtering a full read. A
+        one-column IN plan is a point read (``_point_read``), which a
+        small delete-free slice serves on the driver with Arrow so its
+        ``collect()`` runs no Spark job. Any other plan is a Spark scan
+        of the kept dirs plus the residual filter. With no dir kept the
+        result has the version's schema and no rows."""
+        if len(plan.where) == 1:
+            ((col, pred),) = plan.where.items()
+            if isinstance(pred, list):
+                return self._point_read(
+                    spark, plan.manifest, plan.kept, col, pred
+                )
+        return _filtered(
+            self._read_kept(spark, plan.manifest, plan.kept), plan.where
+        )
 
-        if version is None:
-            version = self.current_version()
-        kept, _ = self.pruned_dirs(col, lo, hi, version)
+    def _read_kept(
+        self, spark: SparkSession, manifest: dict, kept
+    ) -> DataFrame:
+        """``_read_dirs`` of ``kept``; with none kept, the version's
+        schema and no rows (limit(0) prunes at the planner, not the
+        scan)."""
         if kept:
-            df = self._read_dirs(spark, self._manifest(version), kept)
-        else:
-            # Every dir proved non-matching: keep the schema, read no
-            # rows (limit(0) prunes at the planner, not the scan).
-            df = self.read(spark, version).limit(0)
-        if lo is not None:
-            df = df.filter(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.filter(F.col(col) <= F.lit(hi))
-        return df
+            return self._read_dirs(spark, manifest, kept)
+        return self._read_dirs(spark, manifest, manifest["dirs"]).limit(0)
 
     def read_changes(
         self,
@@ -1604,250 +1778,6 @@ class TransactionalTable:
                     seen.add(d)
         return new_dirs
 
-    def pruned_dirs_multi(
-        self,
-        predicates: dict,
-        version: int | None = None,
-    ) -> tuple[list[str], list[str]]:
-        """(kept, skipped) for a CONJUNCTION of range predicates
-        ``{col: (lo, hi)}`` — the compound shape real scans have (a
-        time range AND a key range). A dir is skipped if ANY column's
-        recorded stats preclude its range (AND semantics: one
-        impossible conjunct makes the row impossible), so multi-column
-        skipping prunes at least as much as the best single column.
-        Each (lo, hi) may leave one side None; every predicate must
-        bound at least one side."""
-        if not predicates:
-            raise ValueError("pruned_dirs_multi needs at least one predicate")
-        if version is None:
-            version = self.current_version()
-        if version < 1 or version not in self.versions():
-            raise ValueError(
-                f"version {version} does not exist "
-                f"(available: {self.versions() or 'none'})"
-            )
-        for col, (lo, hi) in predicates.items():
-            if lo is None and hi is None:
-                raise ValueError(
-                    f"predicate on {col!r} bounds neither side; an "
-                    "unbounded conjunct prunes nothing"
-                )
-        # One manifest resolve for the whole conjunction; kept is the
-        # set intersection of the per-column keeps (a dir survives only
-        # if NO conjunct's stats preclude it).
-        manifest = self._manifest(version)
-        kept_set: set[str] | None = None
-        skipped_all: set[str] = set()
-        for col, (lo, hi) in predicates.items():
-            k, s = self._range_prune(manifest, col, lo, hi)
-            skipped_all.update(s)
-            kept_set = set(k) if kept_set is None else kept_set & set(k)
-        kept = [d for d in manifest["dirs"] if d in kept_set]
-        return kept, sorted(skipped_all)
-
-    def read_pruned_multi(
-        self,
-        spark: SparkSession,
-        predicates: dict,
-        version: int | None = None,
-    ) -> DataFrame:
-        """Rows satisfying every ``lo <= col <= hi`` in ``predicates``,
-        scanning only dirs no conjunct's stats rule out; residual
-        filters still applied (pruning is never lossy)."""
-        from pyspark.sql import functions as F
-
-        if version is None:
-            version = self.current_version()
-        kept, _ = self.pruned_dirs_multi(predicates, version)
-        if kept:
-            df = self._read_dirs(spark, self._manifest(version), kept)
-        else:
-            df = self.read(spark, version).limit(0)
-        for col, (lo, hi) in predicates.items():
-            if lo is not None:
-                df = df.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(col) <= F.lit(hi))
-        return df
-
-    def pruned_dirs_eq(
-        self, col: str, value, version: int | None = None
-    ) -> tuple[list[str], list[str]]:
-        """(kept, skipped) snapshot dir names for a POINT lookup
-        ``col = value``, decided from manifest metadata only. Two
-        independent sound prunings compose: the min/max range (value
-        outside [min, max] — effective when the key is clustered) and
-        the Bloom bitmap (any of the probe's k bits unset — effective
-        even when the key is scattered across every snapshot's range).
-        Dirs with neither kind of metadata are always kept. ``value``
-        must be an int or str: those are the types whose Python string
-        form is IDENTICAL to the Spark string cast the snapshot's bloom
-        hashed, so the probe positions line up bit-for-bit. Other types
-        (bool → 'True' vs 'true', timestamps → '.500000' vs '.5',
-        floats) render differently and would silently skip dirs that
-        hold the value — so they raise instead (review finding)."""
-        self._check_eq_probe(value)
-        if version is None:
-            version = self.current_version()
-        if version < 1 or version not in self.versions():
-            raise ValueError(
-                f"version {version} does not exist "
-                f"(available: {self.versions() or 'none'})"
-            )
-        manifest = self._manifest(version)
-        return self._eq_prune(manifest, col, value)
-
-    @staticmethod
-    def _check_eq_probe(value) -> None:
-        if value is None:
-            raise ValueError("equality never matches NULL; nothing to look up")
-        if isinstance(value, bool) or not isinstance(value, (int, str)):
-            raise TypeError(
-                f"point-lookup key must be int or str (got "
-                f"{type(value).__name__}); other types' str() diverges "
-                "from Spark's string cast and would make bloom skipping "
-                "unsound"
-            )
-
-    @staticmethod
-    def _eq_prune(
-        manifest: dict, col: str, value
-    ) -> tuple[list[str], list[str]]:
-        """The metadata-only point-lookup decision over ONE resolved
-        manifest — shared by ``pruned_dirs_eq`` and the batched
-        ``pruned_dirs_eq_many`` (which amortizes the manifest
-        resolve/validate across an IN-list of probes)."""
-        stats = manifest.get("stats", {})
-        v_j = _json_stat(value)
-        # Probe positions depend only on (value, k, bits) — computed
-        # once, not per dir (an append-heavy manifest has one dir per
-        # microbatch; review finding).
-        pos_cache: dict[tuple[int, int], list[int]] = {}
-
-        def probe_positions(k: int, bits: int) -> list[int]:
-            if (k, bits) not in pos_cache:
-                pos_cache[(k, bits)] = [
-                    hash60_py(str(value), i) % bits for i in range(k)
-                ]
-            return pos_cache[(k, bits)]
-
-        kept, skipped = [], []
-        for d in manifest["dirs"]:
-            entry = stats.get(d, {})
-            cs = entry.get("cols", {}).get(col)
-            if cs is not None and cs[0] is None:
-                skipped.append(d)
-                continue
-            if cs is not None:
-                try:
-                    out_of_range = cs[0] > v_j or cs[1] < v_j
-                except TypeError:
-                    # Probe/stat types don't order (int probe on string
-                    # stats): undecidable, never skip on it.
-                    out_of_range = False
-                if out_of_range:
-                    skipped.append(d)
-                    continue
-            bl = entry.get("bloom", {}).get(col)
-            # The bitmap hashed CAST(col AS STRING); the probe hashes
-            # str(value). Use the bloom only when the recorded column
-            # type guarantees those renderings agree — on a mismatch
-            # (int probe on a DOUBLE/DECIMAL column: '7' vs '7.0') fall
-            # back to keeping the dir instead of silently skipping
-            # every dir that holds the value (advisor finding).
-            if bl is not None and bl.get("type") in _BLOOM_SOUND_TYPES[
-                type(value)
-            ]:
-                bm = int(bl["hex"], 16)
-                if not all(
-                    (bm >> p) & 1
-                    for p in probe_positions(bl["k"], bl["bits"])
-                ):
-                    skipped.append(d)
-                    continue
-            kept.append(d)
-        return kept, skipped
-
-    def read_eq(
-        self, spark: SparkSession, col: str, value, version: int | None = None
-    ) -> DataFrame:
-        """The rows of ``version`` with ``col = value``, reading only
-        the snapshot dirs whose manifest metadata (range stats + Bloom
-        bitmap, ``pruned_dirs_eq``) cannot rule out. The point-lookup
-        counterpart of ``read_pruned``: at 100 TB an id probe touches
-        the one snapshot that can hold it.
-
-        When the kept files are small and carry no deletes, the driver
-        reads them with Arrow and returns a local relation, so the
-        caller's ``collect()`` runs no Spark job; otherwise the dirs
-        are scanned by Spark (``_point_read`` has the conditions). Both
-        paths apply the residual equality filter and return the same
-        rows and schema."""
-        if version is None:
-            version = self.current_version()
-        kept, _ = self.pruned_dirs_eq(col, value, version)
-        return self._point_read(
-            spark, self._manifest(version), kept, col, [value], many=False
-        )
-
-    def pruned_dirs_eq_many(
-        self, col: str, values, version: int | None = None
-    ) -> tuple[list[str], list[str]]:
-        """Batched point lookup: (kept, skipped) for ``col IN values``.
-        A dir is kept if ANY probe's metadata cannot rule it out (IN is
-        a disjunction). Resolves and validates the manifest ONCE for
-        the whole probe set — the serving-path shape, where a beam
-        walk's frontier probes 10-50 ids per hop and per-id manifest
-        reads would dominate the metadata plane. Same probe-type
-        soundness rules as ``pruned_dirs_eq``; duplicate probe values
-        are deduplicated. Empty ``values`` keeps nothing (IN () matches
-        no row) and skips everything."""
-        if version is None:
-            version = self.current_version()
-        if version < 1 or version not in self.versions():
-            raise ValueError(
-                f"version {version} does not exist "
-                f"(available: {self.versions() or 'none'})"
-            )
-        return self._eq_prune_many(self._manifest(version), col, values)
-
-    def _eq_prune_many(
-        self, manifest: dict, col: str, values
-    ) -> tuple[list[str], list[str]]:
-        """``pruned_dirs_eq_many`` over an ALREADY-RESOLVED manifest —
-        the serving-walk entry point: a beam walk probes the same
-        immutable version once per hop, so the caller pins the manifest
-        for the walk's duration and pays the resolve/validate exactly
-        once (round-9 verdict item; manifests are CAS-published and
-        never rewritten, so holding one is always sound)."""
-        vals = list(dict.fromkeys(values))
-        for v in vals:
-            self._check_eq_probe(v)
-        kept_set: set[str] = set()
-        for v in vals:
-            k, _ = self._eq_prune(manifest, col, v)
-            kept_set.update(k)
-        kept = [d for d in manifest["dirs"] if d in kept_set]
-        skipped = [d for d in manifest["dirs"] if d not in kept_set]
-        return kept, skipped
-
-    def read_eq_many(
-        self, spark: SparkSession, col: str, values, version: int | None = None
-    ) -> DataFrame:
-        """The rows of ``version`` with ``col IN values``, reading only
-        the dirs ``pruned_dirs_eq_many`` keeps — ``read_eq``'s batched
-        twin (a serving layer's multi-get). Small delete-free slices
-        are served on the driver with Arrow and run no Spark job when
-        collected; the rest fall back to a Spark scan with the residual
-        IN filter, as ``read_eq`` does."""
-        if version is None:
-            version = self.current_version()
-        values = list(values)
-        kept, _ = self.pruned_dirs_eq_many(col, values, version)
-        return self._point_read(
-            spark, self._manifest(version), kept, col, values, many=True
-        )
-
     def delete_where(
         self,
         spark: SparkSession,
@@ -1878,8 +1808,8 @@ class TransactionalTable:
             raise ValueError("nothing to delete: table has no committed version")
         if lo is None and hi is None:
             raise ValueError("delete_where needs at least one bound")
-        may_match, preserved = self.pruned_dirs(col, lo, hi, cur)
         manifest = self._manifest(cur)
+        may_match, preserved = self._prune(manifest, {col: (lo, hi)})
         old_stats = manifest.get("stats", {})
         new_version = cur + 1
 
@@ -1982,7 +1912,7 @@ class TransactionalTable:
                     "deletion-vector machinery's reserved names; rename "
                     "them or use the copy-on-write delete_where"
                 )
-        may_match, preserved = self.pruned_dirs(col, lo, hi, cur)
+        may_match, preserved = self._prune(manifest, {col: (lo, hi)})
         new_version = cur + 1
         dv_map = _carry_dv(manifest, manifest["dirs"])
         eq_map = _carry_eq(manifest, manifest["dirs"])
@@ -2038,22 +1968,19 @@ class TransactionalTable:
                 name = os.path.basename(dvdir)
                 for d in may_match:
                     dv_map.setdefault(d, []).append(name)
+        layout_meta, layout = _carried_layout(manifest)
         payload = {
             "version": new_version,
             "mode": "delete_dv",
             **({"schema": sj} if sj is not None else {}),
             **_carried_props(manifest),
             "dirs": list(manifest["dirs"]),
+            **layout,
             "meta": {
                 # A DV delete never disturbs the partitioned layout, so
-                # replace_partitions keeps working across it.
-                **(
-                    {
-                        "partitioned_by": manifest["meta"]["partitioned_by"]
-                    }
-                    if manifest.get("meta", {}).get("partitioned_by")
-                    else {}
-                ),
+                # replace_partitions and layout pruning keep working
+                # across it.
+                **layout_meta,
                 "deleted_from": cur,
                 "dv_rows": dv_rows,
                 "dv_target_dirs": len(may_match),
@@ -2148,7 +2075,7 @@ class TransactionalTable:
             may_match: list[str] = []
             preserved = list(manifest["dirs"])
         else:
-            may_match, preserved = self.pruned_dirs(key, lo, hi, cur)
+            may_match, preserved = self._prune(manifest, {key: (lo, hi)})
         old_stats = manifest.get("stats", {})
         new_version = cur + 1
         dirs = [d for d in manifest["dirs"] if d in set(preserved)]
@@ -2377,7 +2304,7 @@ class TransactionalTable:
             may_match: list[str] = []
             preserved = list(manifest["dirs"])
         else:
-            may_match, preserved = self.pruned_dirs(key, lo, hi, cur)
+            may_match, preserved = self._prune(manifest, {key: (lo, hi)})
         new_version = cur + 1
         dv_map = _carry_dv(manifest, manifest["dirs"])
         eq_map = _carry_eq(manifest, manifest["dirs"])
@@ -2487,7 +2414,7 @@ class TransactionalTable:
             may_match: list[str] = []
             preserved = list(manifest["dirs"])
         else:
-            may_match, preserved = self.pruned_dirs(key, lo, hi, cur)
+            may_match, preserved = self._prune(manifest, {key: (lo, hi)})
         new_version = cur + 1
         dv_map = _carry_dv(manifest, manifest["dirs"])
         eq_map = _carry_eq(manifest, manifest["dirs"])
@@ -2501,37 +2428,26 @@ class TransactionalTable:
             name = os.path.basename(eqdir)
             for d in may_match:
                 eq_map.setdefault(d, []).append(name)
+        layout_meta, layout = _carried_layout(manifest)
         payload = {
             "version": new_version,
             "mode": "delete_eq",
             **({"schema": sj} if sj is not None else {}),
             **_carried_props(manifest),
             "dirs": list(manifest["dirs"]),
+            **layout,
             "meta": {
                 # An equality delete never disturbs the partitioned
                 # layout (dirs are carried verbatim), so the layout
                 # metadata must travel — dropping it would wedge every
-                # partition-aware op on the table (r12 second review;
-                # same carry as delete_where_dv, plus the transform).
-                **(
-                    {
-                        k: manifest["meta"][k]
-                        for k in (
-                            "partitioned_by",
-                            "partition_transform",
-                        )
-                        if manifest.get("meta", {}).get(k)
-                    }
-                ),
+                # partition-aware op on the table.
+                **layout_meta,
                 "deleted_from": cur,
                 "eq_keys": int(bounds["n_keys"] or 0),
                 "eq_target_dirs": len(may_match),
                 "preserved_dirs": len(preserved),
             },
         }
-        if manifest.get("specs"):
-            payload["specs"] = manifest["specs"]
-            payload["dir_spec"] = manifest["dir_spec"]
         if manifest.get("stats"):
             payload["stats"] = dict(manifest["stats"])
         if dv_map:
@@ -2602,7 +2518,7 @@ class TransactionalTable:
             may_match: list[str] = []
             preserved = list(manifest["dirs"])
         else:
-            may_match, preserved = self.pruned_dirs(key, lo, hi, cur)
+            may_match, preserved = self._prune(manifest, {key: (lo, hi)})
         new_version = cur + 1
         dv_map = _carry_dv(manifest, manifest["dirs"])
         eq_map = _carry_eq(manifest, manifest["dirs"])
@@ -2781,7 +2697,7 @@ class TransactionalTable:
             may_match: list[str] = []
             preserved = list(manifest["dirs"])
         else:
-            may_match, preserved = self.pruned_dirs(key, lo, hi, cur)
+            may_match, preserved = self._prune(manifest, {key: (lo, hi)})
         old_stats = manifest.get("stats", {})
         new_version = cur + 1
         dirs = [d for d in manifest["dirs"] if d in set(preserved)]
@@ -3125,7 +3041,7 @@ class TransactionalTable:
         scaled columns, each sub-dir carrying min/max stats on BOTH
         columns. Where ``compact_clustered`` restores skipping along
         ONE axis, a z-layout bounds every sub-dir's extent in BOTH
-        dimensions — so ``pruned_dirs_multi``'s compound predicates
+        dimensions — so ``plan``'s compound predicates
         (the time-range-AND-key-range shape real scans have) prune on
         either or both columns after ONE rewrite. Same contracts as
         ``compact_clustered``: deterministic equal-width grid (scaling
@@ -3338,9 +3254,13 @@ class TransactionalTable:
     def _dir_specs(self, manifest: dict) -> dict[str, dict] | None:
         """dir -> ``{"col", "transform"}`` for every live dir of a
         partitioned manifest. Evolved manifests record a spec list +
-        per-dir index (``specs``/``dir_spec``); legacy single-spec
-        manifests map every dir to identity(partitioned_by). None when
-        the manifest was not published by a partitioned commit."""
+        per-dir index (``specs``/``dir_spec``); a single-spec manifest
+        without them maps every dir to identity(partitioned_by) only
+        when it records the identity transform. None when the manifest
+        was not published by a partitioned commit, or when its spec
+        list is missing and the layout is not provably identity (a
+        writer that dropped the specs may have dropped a bucket or
+        truncate transform with them)."""
         meta = manifest.get("meta", {})
         col = meta.get("partitioned_by")
         if col is None:
@@ -3349,6 +3269,8 @@ class TransactionalTable:
         if specs:
             ds = manifest.get("dir_spec", {})
             return {d: specs[ds[d]] for d in manifest["dirs"] if d in ds}
+        if meta.get("partition_transform") != "identity":
+            return None
         return {
             d: {"col": col, "transform": "identity"} for d in manifest["dirs"]
         }
@@ -3501,7 +3423,7 @@ class TransactionalTable:
         (identity | day | month | truncate[W] | bucket[N]) is HIDDEN
         partitioning: the layout is keyed by a derived value while
         queries keep predicating on the source column —
-        ``read_pruned_part``/``read_eq_part`` map source-column bounds
+        ``plan`` maps source-column bounds
         to key bounds and skip whole sub-dirs, no derived column in the
         data or the query. NULL source keys land in the Hive default
         partition sub-dir (they are data, not an error).
@@ -3681,7 +3603,12 @@ class TransactionalTable:
                 "replace_partitions needs the partitioned layout"
             )
         canon = manifest.get("meta", {}).get("partition_transform", "identity")
-        dir_specs = self._dir_specs(manifest) or {}
+        dir_specs = self._dir_specs(manifest)
+        if dir_specs is None:
+            raise ValueError(
+                f"version {cur} does not record its partition transform; "
+                "run rewrite_partitioned() to re-key the layout first"
+            )
         live_specs = {json.dumps(s, sort_keys=True) for s in dir_specs.values()}
         if len(live_specs) > 1:
             # A replaced key value could have matching rows hiding in
@@ -3788,160 +3715,28 @@ class TransactionalTable:
             payload["eq"] = eq
         return self._publish_manifest(payload, cur + 1, snap_cleanup)
 
-    def pruned_dirs_part(
-        self,
-        col: str,
-        lo=None,
-        hi=None,
-        version: int | None = None,
-    ) -> tuple[list[str], list[str]]:
-        """(kept, skipped) sub-dirs for ``lo <= col <= hi`` decided by
-        PARTITION LAYOUT — hidden partitioning's read side: each dir's
-        key (from its name) is compared against the predicate bounds
-        mapped through that dir's OWN recorded transform, so the
-        decision stays sound across partition evolution (a day-keyed
-        dir and a month-keyed dir each prune under their own spec).
-        Dirs whose spec keys a different column — or a non-monotone
-        bucket transform — are layout-undecidable and fall through to
-        the per-column min/max stats prune when stats were recorded
-        (the two prunes COMPOSE; both are sound-never-lossy). The NULL
-        partition is skipped: range predicates never match NULL.
-        Zero data reads; one manifest."""
-        if lo is None and hi is None:
-            raise ValueError(
-                "pruned_dirs_part needs at least one bound; an unbounded "
-                "read is read()"
-            )
-        if version is None:
-            version = self.current_version()
-        if version < 1 or version not in self.versions():
-            raise ValueError(
-                f"version {version} does not exist "
-                f"(available: {self.versions() or 'none'})"
-            )
-        manifest = self._manifest(version)
-        dir_specs = self._dir_specs(manifest)
-        if dir_specs is None:
-            raise ValueError(
-                f"version {version} has no partitioned layout; use "
-                "pruned_dirs (stats) instead"
-            )
-        layout_kept, skipped = [], []
-        for d in manifest["dirs"]:
-            spec = dir_specs.get(d)
-            if spec is None or spec["col"] != col:
-                layout_kept.append(d)
-                continue
-            kind, param, _ = self._parse_transform(spec["transform"])
-            if kind == "bucket":
-                layout_kept.append(d)  # non-monotone: ranges undecidable
-                continue
-            k = self._dir_key(d)
-            if k is None:  # NULL partition: range predicates never match
-                skipped.append(d)
-                continue
-            t_lo = self._transform_key_py(lo, kind, param)
-            t_hi = self._transform_key_py(hi, kind, param)
-            if (t_lo is not None and k < t_lo) or (
-                t_hi is not None and k > t_hi
-            ):
-                skipped.append(d)
-            else:
-                layout_kept.append(d)
-        sub = dict(manifest)
-        sub["dirs"] = layout_kept
-        kept, stats_skipped = self._range_prune(sub, col, lo, hi)
-        return kept, skipped + stats_skipped
-
-    def read_pruned_part(
-        self,
-        spark: SparkSession,
-        col: str,
-        lo=None,
-        hi=None,
-        version: int | None = None,
-    ) -> DataFrame:
-        """The rows of ``version`` satisfying ``lo <= col <= hi``,
-        scanning only the sub-dirs the partition layout (+ stats) keeps
-        (``pruned_dirs_part``) — the hidden-partitioning promise: the
-        query predicates on the SOURCE column, never on a derived
-        partition key, and still reads O(matching partitions). The
-        residual filter is applied, so results are identical to
-        filtering a full read."""
-        from pyspark.sql import functions as F
-
-        if version is None:
-            version = self.current_version()
-        kept, _ = self.pruned_dirs_part(col, lo, hi, version)
-        if kept:
-            df = self._read_dirs(spark, self._manifest(version), kept)
-        else:
-            df = self.read(spark, version).limit(0)
-        if lo is not None:
-            df = df.filter(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.filter(F.col(col) <= F.lit(hi))
-        return df
-
     def pruned_dirs_part_eq(
         self, col: str, value, version: int | None = None
     ) -> tuple[list[str], list[str]]:
-        """(kept, skipped) sub-dirs for ``col = value`` by partition
-        layout — the point-lookup path where BUCKET transforms earn
-        their keep: only the dir whose key equals transform(value)
-        can match (plus layout-undecidable dirs keyed by another
-        column, which fall through to the stats prune). NULL-partition
-        dirs are skipped (equality never matches NULL)."""
-        if value is None:
-            raise ValueError("col = NULL matches nothing; use a scan")
-        if version is None:
-            version = self.current_version()
-        if version < 1 or version not in self.versions():
-            raise ValueError(
-                f"version {version} does not exist "
-                f"(available: {self.versions() or 'none'})"
-            )
-        manifest = self._manifest(version)
-        dir_specs = self._dir_specs(manifest)
-        if dir_specs is None:
-            raise ValueError(
-                f"version {version} has no partitioned layout; use "
-                "pruned_dirs_eq (bloom) instead"
-            )
-        layout_kept, skipped = [], []
-        for d in manifest["dirs"]:
-            spec = dir_specs.get(d)
-            if spec is None or spec["col"] != col:
-                layout_kept.append(d)
-                continue
-            kind, param, _ = self._parse_transform(spec["transform"])
-            k = self._dir_key(d)
-            if k is not None and k == self._transform_key_py(
-                value, kind, param
-            ):
-                layout_kept.append(d)
-            else:
-                skipped.append(d)
-        sub = dict(manifest)
-        sub["dirs"] = layout_kept
-        kept, stats_skipped = self._range_prune(sub, col, value, value)
-        return kept, skipped + stats_skipped
+        """(kept, skipped) of ``plan({col: [value]}, version)``. The
+        term lookup ``read_eq_part`` calls it through the instance, so a
+        tracer can wrap it to time the prune and count the dirs kept."""
+        p = self.plan({col: [value]}, version)
+        return p.kept, p.skipped
 
     def read_eq_part(
         self, spark: SparkSession, col: str, value, version: int | None = None
     ) -> DataFrame:
-        """The rows of ``version`` with ``col = value``, reading only
-        the sub-dirs ``pruned_dirs_part_eq`` keeps — identical to
-        filtering a full read. This is the term lookup of a bucketed
-        postings table: a small delete-free bucket is read on the driver
-        with Arrow and its ``collect()`` runs no Spark job; any other
-        slice (deletes, large files, a probe of another type than the
-        key) is scanned by Spark, as ``read_eq`` does."""
-        if version is None:
-            version = self.current_version()
-        kept, _ = self.pruned_dirs_part_eq(col, value, version)
-        return self._point_read(
-            spark, self._manifest(version), kept, col, [value], many=False
+        """``scan`` of the rows of ``version`` with ``col = value`` over
+        the dirs ``pruned_dirs_part_eq`` keeps: the term lookup of a
+        bucketed postings table, served on the driver when small."""
+        version = self._resolve(version)
+        kept, skipped = self.pruned_dirs_part_eq(col, value, version)
+        return self.scan(
+            spark,
+            ScanPlan(
+                version, self._manifest(version), {col: [value]}, kept, skipped
+            ),
         )
 
     def diff(
@@ -4452,10 +4247,7 @@ class TransactionalTable:
         This is the aggregate pushdown every table format serves
         COUNT(*) from; at 100 TB it is the difference between a
         catalog lookup and a full scan."""
-        if version is None:
-            version = self.current_version()
-        if version < 1 or version not in self.versions():
-            raise ValueError(f"version {version} does not exist")
+        version = self._resolve(version)
         return self._fast_count_m(self._manifest(version))
 
     def _fast_count_m(self, manifest: dict) -> int | None:
@@ -4531,10 +4323,7 @@ class TransactionalTable:
         conservative bounds, not exact answers). All-NULL/empty dirs
         (stats [None, None]) are ignored, matching SQL min/max NULL
         semantics; returns (None, None) if every dir is all-NULL."""
-        if version is None:
-            version = self.current_version()
-        if version < 1 or version not in self.versions():
-            raise ValueError(f"version {version} does not exist")
+        version = self._resolve(version)
         manifest = self._manifest(version)
         if manifest.get("dv") or manifest.get("eq"):
             # Merge-on-read deletes may have removed the extreme rows;
@@ -4609,7 +4398,7 @@ class TransactionalTable:
                 continue  # overwrite: the batch IS the new table
             if b["lo"] is None:
                 continue  # all keys NULL: exempt
-            kept, _ = self._range_prune(prev_manifest, c, b["lo"], b["hi"])
+            kept, _ = self._prune(prev_manifest, {c: (b["lo"], b["hi"])})
             scanned += len(kept)
             if not kept:
                 continue
@@ -4808,12 +4597,7 @@ class TransactionalTable:
             raise ValueError(
                 f"version {version} is already the current head"
             )
-        if version < 1 or version not in self.versions():
-            raise ValueError(
-                f"version {version} does not exist "
-                f"(available: {self.versions() or 'none'})"
-            )
-        tm = self._manifest(version)
+        tm = self._manifest(self._resolve(version))
         cm = self._manifest(cur)
         # Meta is NOT carried from either side: the head's meta can
         # hold a streaming sink's batch_id (carrying it would make a
@@ -4823,26 +4607,15 @@ class TransactionalTable:
         # the target's partition layout marker, which describes the
         # restored DIRS (commit_partitioned/replace_partitions key on
         # it).
-        meta = {"restored_from": version}
-        if tm.get("meta", {}).get("partitioned_by"):
-            meta["partitioned_by"] = tm["meta"]["partitioned_by"]
-            # The transform + per-dir spec index MUST travel with the
-            # dirs they describe: restoring a bucket/month layout as
-            # bare partitioned_by would attribute identity specs to
-            # transformed keys and make layout pruning unsound.
-            meta["partition_transform"] = tm["meta"].get(
-                "partition_transform", "identity"
-            )
+        layout_meta, layout = _carried_layout(tm)
         payload = {
             "version": cur + 1,
             "mode": "restore",
             "dirs": list(tm["dirs"]),
             **_carried_props(cm),
-            "meta": meta,
+            **layout,
+            "meta": {"restored_from": version, **layout_meta},
         }
-        if tm.get("specs"):
-            payload["specs"] = tm["specs"]
-            payload["dir_spec"] = tm["dir_spec"]
         if tm.get("schema") is not None:
             payload["schema"] = tm["schema"]
         if tm.get("stats"):
@@ -4997,8 +4770,8 @@ class TransactionalTable:
             # partitioned_by lives under meta (like every other reader
             # of it); dir_spec/specs are top-level. Checking only the
             # top level would silently admit a partitioned head whose
-            # spec keys weren't carried (e.g. after delete_where_dv),
-            # and the clone would drop the layout metadata.
+            # spec keys weren't recorded (a single-spec manifest), and
+            # the clone would drop the layout metadata.
             raise ValueError(
                 "shallow clone of hidden-partitioned layouts is not "
                 "supported (pruning metadata is keyed by sub-dir name); "
@@ -5070,10 +4843,7 @@ class TransactionalTable:
             raise ValueError("tags pin main versions; tag from the main view")
         if not re.match(_REF_NAME_RE, name):
             raise ValueError(f"invalid ref name {name!r}")
-        if version is None:
-            version = self.current_version()
-        if version < 1 or version not in self.versions():
-            raise ValueError(f"version {version} does not exist")
+        version = self._resolve(version)
         tags_dir = os.path.join(self.path, "_tags")
         os.makedirs(tags_dir, exist_ok=True)
         tmp = os.path.join(tags_dir, f".tmp-{uuid.uuid4().hex[:12]}.json")

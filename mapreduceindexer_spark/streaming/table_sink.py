@@ -50,7 +50,7 @@ def _append_batch(
         # Partitioned streaming ingest: each microbatch appends under
         # the table's (hidden-partition) spec, so a forever-appending
         # stream lands day/bucket-aligned and the lifecycle ops
-        # (read_pruned_part, delete_where_part retention) apply to the
+        # (plan/scan, delete_where_part retention) apply to the
         # streamed table exactly as to a batch-built one. Same
         # batch_id idempotence + CAS.
         table.commit_partitioned(

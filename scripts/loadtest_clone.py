@@ -60,11 +60,10 @@ def run_scale(spark, n_rows: int) -> dict:
         clone_s = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        kept, skipped = clone.pruned_dirs("id", lo=third, hi=third + 100)
-        n_point = clone.read_pruned(
-            spark, "id", lo=third, hi=third + 100
-        ).count()
+        plan = clone.plan({"id": (third, third + 100)})
+        n_point = clone.scan(spark, plan).count()
         pruned_read_s = time.perf_counter() - t0
+        kept, skipped = plan.kept, plan.skipped
         assert len(kept) == 1 and len(skipped) == 2, (kept, skipped)
         assert n_point == 101, n_point
 

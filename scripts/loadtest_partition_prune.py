@@ -60,13 +60,11 @@ def run_scale(spark, n_rows: int) -> dict:
 
         lo, hi = dt.date(2024, 2, 1), dt.date(2024, 2, 7)
         t0 = time.monotonic()
-        kept, skipped = day_t.pruned_dirs_part("d", lo, hi)
+        plan = day_t.plan({"d": (lo, hi)})
         out["range_decide_s"] = round(time.monotonic() - t0, 4)
-        out["range_dirs"] = [len(kept), len(skipped)]
+        out["range_dirs"] = [len(plan.kept), len(plan.skipped)]
         t0 = time.monotonic()
-        out["range_pruned_rows"] = day_t.read_pruned_part(
-            spark, "d", lo, hi
-        ).count()
+        out["range_pruned_rows"] = day_t.scan(spark, plan).count()
         out["range_pruned_s"] = round(time.monotonic() - t0, 3)
         t0 = time.monotonic()
         full = (
@@ -79,11 +77,11 @@ def run_scale(spark, n_rows: int) -> dict:
 
         probe = n_rows // 2
         t0 = time.monotonic()
-        kept, skipped = bkt_t.pruned_dirs_part_eq("id", probe)
+        plan = bkt_t.plan({"id": [probe]})
         out["point_decide_s"] = round(time.monotonic() - t0, 4)
-        out["point_dirs"] = [len(kept), len(skipped)]
+        out["point_dirs"] = [len(plan.kept), len(plan.skipped)]
         t0 = time.monotonic()
-        out["point_rows"] = bkt_t.read_eq_part(spark, "id", probe).count()
+        out["point_rows"] = bkt_t.scan(spark, plan).count()
         out["point_pruned_s"] = round(time.monotonic() - t0, 3)
         t0 = time.monotonic()
         full = bkt_t.read(spark).filter(F.col("id") == probe).count()

@@ -5,7 +5,7 @@ Part A — data skipping / DML pruning at many snapshots:
   Build a transactional table of SNAPS range-disjoint snapshots (each a
   full sf0.1 documents copy with shifted doc_ids, ~5k rows/snapshot),
   all committed with doc_id stats. Measure, wall-clock:
-    - full read + filter (scans every snapshot) vs read_pruned (scans 1)
+    - full read + filter (scans every snapshot) vs a planned scan (1)
     - delete_where on a 1-snapshot range WITH stats (1 dir rewritten)
       vs the same delete on a stats-less clone (every dir rewritten)
     - merge_rows with a 1-snapshot key range (1 dir rewritten + batch)
@@ -81,9 +81,10 @@ def main() -> None:
     full_s = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    pruned = t.read_pruned(spark, "doc_id", mid_lo, mid_hi).count()
+    plan = t.plan({"doc_id": (mid_lo, mid_hi)})
+    pruned = t.scan(spark, plan).count()
     pruned_s = time.perf_counter() - t0
-    kept, skipped = t.pruned_dirs("doc_id", mid_lo, mid_hi)
+    kept, skipped = plan.kept, plan.skipped
     assert full == pruned == n, (full, pruned, n)
     emit(
         test="ranged_read", snaps=snaps, rows=snaps * n,

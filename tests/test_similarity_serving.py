@@ -78,12 +78,10 @@ def test_persisted_index_is_clustered_and_prunable(spark, served):
     # (range disjointness makes min/max pruning effective) and reads
     # exactly that node's adjacency.
     some_id = 23
-    kept, skipped = table.pruned_dirs_eq("vec_id", some_id, version=version)
+    plan = table.plan({"vec_id": [some_id]}, version)
+    kept, skipped = plan.kept, plan.skipped
     assert skipped and len(kept) < len(dirs)
-    got = {
-        r["nbr_id"]
-        for r in table.read_eq(spark, "vec_id", some_id, version).collect()
-    }
+    got = {r["nbr_id"] for r in table.scan(spark, plan).collect()}
     want = {
         r["nbr_id"]
         for r in edges.filter(F.col("vec_id") == some_id).collect()

@@ -404,8 +404,8 @@ def test_table_sink_batches_record_skipping_stats(spark, tmp_path):
     assert m["stats"][d1]["cols"]["id"] == [0, 4]
     assert "bloom" in m["stats"][d1]
     assert m["stats"][d2]["cols"]["id"] == [5, 8]
-    kept, skipped = t.pruned_dirs("id", lo=6, hi=7)
-    assert kept == [d2] and skipped == [d1]
+    plan = t.plan({"id": (6, 7)})
+    assert plan.kept == [d2] and plan.skipped == [d1]
     _append_batch(t, spark.range(99, 100), 1, stats_cols=("id",))
     assert t.current_version() == 2  # retried batch still no-ops
 
@@ -680,13 +680,9 @@ def test_stream_into_partitioned_table_then_expire(spark, tmp_path):
     assert m["meta"]["partition_transform"] == "day"
     assert sorted(r["id"] for r in t.read(spark).collect()) == list(range(12))
     # The streamed layout prunes: one day touches only that day's dirs.
-    kept, skipped = t.pruned_dirs_part(
-        "d", dt.date(2024, 1, 11), dt.date(2024, 1, 11)
-    )
-    assert kept and skipped
-    got = sorted(r["id"] for r in t.read_pruned_part(
-        spark, "d", dt.date(2024, 1, 11), dt.date(2024, 1, 11)
-    ).collect())
+    plan = t.plan({"d": (dt.date(2024, 1, 11), dt.date(2024, 1, 11))})
+    assert plan.kept and plan.skipped
+    got = sorted(r["id"] for r in t.scan(spark, plan).collect())
     assert got == [i for i in range(12) if i % 4 == 1]
     # Replaying the whole backlog (fresh query, same table) must no-op
     # via batch-id idempotence — not duplicate a single row.

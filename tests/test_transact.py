@@ -14,11 +14,18 @@ import pytest
 from mapreduceindexer_spark.sources.transact import (
     CommitConflict,
     TransactionalTable,
+    _filtered,
 )
 
 
 def _ids(df):
     return sorted(r[0] for r in df.select("id").collect())
+
+
+def _dirs(t, where, version=None):
+    """(kept, skipped) of ``t.plan(where, version)``."""
+    plan = t.plan(where, version)
+    return plan.kept, plan.skipped
 
 
 def test_commit_append_time_travel(spark, tmp_path):
@@ -227,18 +234,18 @@ def test_pruned_dirs_skip_only_provably_nonmatching(spark, tmp_path):
     t.commit(spark.range(20, 30), mode="append")  # stats-less: never skipped
     m = t._manifest(3)
     d1, d2, d3 = m["dirs"]
-    kept, skipped = t.pruned_dirs("id", lo=12, hi=15)
+    kept, skipped = _dirs(t, {"id": (12, 15)})
     assert kept == [d2, d3] and skipped == [d1]
     # Unbounded sides.
-    kept, skipped = t.pruned_dirs("id", hi=3)
+    kept, skipped = _dirs(t, {"id": (None, 3)})
     assert kept == [d1, d3] and skipped == [d2]
-    kept, skipped = t.pruned_dirs("id", lo=18)
+    kept, skipped = _dirs(t, {"id": (18, None)})
     assert kept == [d2, d3] and skipped == [d1]
     # Boundary touch keeps the dir (max == lo can match).
-    kept, _ = t.pruned_dirs("id", lo=9, hi=9)
+    kept, _ = _dirs(t, {"id": (9, 9)})
     assert d1 in kept
     # A column with no stats anywhere prunes nothing.
-    kept, skipped = t.pruned_dirs("nosuch", lo=0, hi=1)
+    kept, skipped = _dirs(t, {"nosuch": (0, 1)})
     assert kept == [d1, d2, d3] and skipped == []
 
 
@@ -249,7 +256,7 @@ def test_read_pruned_matches_full_filter_and_scans_fewer_files(
     t.commit(spark.range(0, 10), stats_cols=["id"])
     t.commit(spark.range(10, 20), mode="append", stats_cols=["id"])
     t.commit(spark.range(20, 30), mode="append", stats_cols=["id"])
-    pruned = t.read_pruned(spark, "id", lo=12, hi=15)
+    pruned = t.scan(spark, t.plan({"id": (12, 15)}))
     assert _ids(pruned) == [12, 13, 14, 15]
     # The pruned scan touches exactly one snapshot dir's files.
     d2 = t._manifest(3)["dirs"][1]
@@ -257,10 +264,10 @@ def test_read_pruned_matches_full_filter_and_scans_fewer_files(
     assert touched == {d2.removeprefix("snap-")}
     # Residual filter still applies inside the kept dir (stats are dir-
     # granular; row-level selection is the filter's job).
-    assert _ids(t.read_pruned(spark, "id", lo=12, hi=12)) == [12]
+    assert _ids(t.scan(spark, t.plan({"id": (12, 12)}))) == [12]
     # Fully out-of-range predicate: zero dirs scanned, empty result,
     # schema intact.
-    empty = t.read_pruned(spark, "id", lo=500)
+    empty = t.scan(spark, t.plan({"id": (500, None)}))
     assert empty.columns == ["id"] and empty.count() == 0
     assert empty.inputFiles() == []
 
@@ -275,9 +282,9 @@ def test_stats_empty_snapshot_is_skippable_and_compact_restates(
     d_empty = m["dirs"][1]
     assert m["stats"][d_empty] == {"rows": 0, "cols": {"id": [None, None]}}
     # Range predicates never match an empty/all-null snapshot.
-    kept, skipped = t.pruned_dirs("id", lo=0, hi=100)
+    kept, skipped = _dirs(t, {"id": (0, 100)})
     assert skipped == [d_empty]
-    assert _ids(t.read_pruned(spark, "id", lo=0, hi=2)) == [0, 1, 2]
+    assert _ids(t.scan(spark, t.plan({"id": (0, 2)}))) == [0, 1, 2]
     # Compaction can (re)state stats for the rewritten snapshot.
     v = t.compact(spark, target_files=1, stats_cols=["id"])
     mm = t._manifest(v)
@@ -455,7 +462,7 @@ def test_merge_mor_matches_cow_and_never_rewrites_base(spark, tmp_path):
     assert got[13] == 130 and got[0] == 0 and got[29] == 290
     assert _ids(t.read(spark, 3)) == list(range(30))  # history intact
     # Base-dir stats carried verbatim: pruning still works post-merge.
-    may, preserved = t.pruned_dirs("id", lo=0, hi=5)
+    may, preserved = _dirs(t, {"id": (0, 5)})
     assert d1 in may and d2 in preserved and d3 in preserved
 
 
@@ -555,12 +562,22 @@ def test_pruned_dirs_requires_bound_and_real_version(spark, tmp_path):
     t = TransactionalTable(str(tmp_path / "t"))
     t.commit(spark.range(0, 3), stats_cols=["id"])
     with pytest.raises(ValueError, match="at least one bound"):
-        t.pruned_dirs("id")
+        _dirs(t, {"id": (None, None)})
     with pytest.raises(ValueError, match="at least one bound"):
-        t.read_pruned(spark, "id")
+        t.scan(spark, t.plan({"id": (None, None)}))
     empty = TransactionalTable(str(tmp_path / "e"))
     with pytest.raises(ValueError, match="does not exist"):
-        empty.pruned_dirs("id", lo=0)
+        _dirs(empty, {"id": (0, None)})
+
+
+def test_plan_predicate_shape_is_checked(spark, tmp_path):
+    """A list is IN and a 2-tuple is a range; any other shape (a set, a
+    3-tuple) is refused rather than unpacked as a range."""
+    t = TransactionalTable(str(tmp_path / "t"))
+    t.commit(spark.range(0, 3), stats_cols=["id"])
+    for pred in ({7, 11}, (7, 11, 13), 7):
+        with pytest.raises(TypeError, match=r"a list \(IN\) or a \(lo, hi\)"):
+            t.plan({"id": pred})
 
 
 def test_bloom_stats_prune_point_lookups_on_unclustered_keys(
@@ -587,7 +604,7 @@ def test_bloom_stats_prune_point_lookups_on_unclustered_keys(
         assert bl["k"] == 5 and bl["bits"] == 8192
         assert int(bl["hex"], 16) > 0
     # id=7 lives in slice 7 % 3 == 1; ranges all overlap 7, bloom prunes.
-    kept, skipped = t.pruned_dirs_eq("id", 7)
+    kept, skipped = _dirs(t, {"id": [7]})
     assert kept == [d[1]] and sorted(skipped) == sorted([d[0], d[2]])
     import pyarrow.dataset as pads
 
@@ -599,7 +616,7 @@ def test_bloom_stats_prune_point_lookups_on_unclustered_keys(
         return real_dataset(source, *args, **kwargs)
 
     monkeypatch.setattr(pads, "dataset", dataset_spy)
-    got = t.read_eq(spark, "id", 7)
+    got = t.scan(spark, t.plan({"id": [7]}))
     assert [r["id"] for r in got.collect()] == [7]
     # Served on the driver: the plan scans no file, and every file Arrow
     # opened lies in the one kept dir.
@@ -607,14 +624,14 @@ def test_bloom_stats_prune_point_lookups_on_unclustered_keys(
     touched = {f.split("/snap-")[1].split("/")[0] for f in opened}
     assert touched == {d[1].removeprefix("snap-")}
     # A value nowhere in the table: all three dirs bloom-skipped.
-    kept, skipped = t.pruned_dirs_eq("id", 999)
+    kept, skipped = _dirs(t, {"id": [999]})
     assert kept == [] and len(skipped) == 3
-    assert t.read_eq(spark, "id", 999).count() == 0
+    assert t.scan(spark, t.plan({"id": [999]})).count() == 0
     # Range stats still participate: value outside every range.
-    kept, _ = t.pruned_dirs_eq("id", -5)
+    kept, _ = _dirs(t, {"id": [-5]})
     assert kept == []
     with pytest.raises(ValueError, match="never matches NULL"):
-        t.pruned_dirs_eq("id", None)
+        _dirs(t, {"id": [None]})
 
 
 def test_bloom_absent_never_skips_and_appends_inherit(spark, tmp_path):
@@ -626,9 +643,9 @@ def test_bloom_absent_never_skips_and_appends_inherit(spark, tmp_path):
     assert "bloom" in m["stats"][d1] and "cols" not in m["stats"][d1]
     assert d2 not in m["stats"]
     # d1 bloom-skipped for 101, d2 unprunable -> kept.
-    kept, skipped = t.pruned_dirs_eq("id", 101)
+    kept, skipped = _dirs(t, {"id": [101]})
     assert kept == [d2] and skipped == [d1]
-    assert [r["id"] for r in t.read_eq(spark, "id", 101).collect()] == [101]
+    assert [r["id"] for r in t.scan(spark, t.plan({"id": [101]})).collect()] == [101]
 
 
 def test_read_changes_returns_only_the_delta(spark, tmp_path):
@@ -665,8 +682,8 @@ def test_point_lookup_rejects_unsound_key_types(spark, tmp_path):
     t.commit(spark.range(0, 3), bloom_cols=["id"])
     for bad in (True, 1.5, datetime.datetime(2020, 1, 1)):
         with pytest.raises(TypeError, match="int or str"):
-            t.pruned_dirs_eq("id", bad)
-    kept, _ = t.pruned_dirs_eq("id", 1)  # int stays fine
+            _dirs(t, {"id": [bad]})
+    kept, _ = _dirs(t, {"id": [1]})  # int stays fine
     assert kept
 
 
@@ -674,7 +691,7 @@ def test_point_lookup_type_mismatch_never_bloom_skips(spark, tmp_path):
     """Advisor finding: the probe-side int/str guard is not enough —
     an int probe against a DOUBLE column hashes '7' while the snapshot
     bloom hashed Spark's cast '7.0', so every dir holding the value
-    would be bloom-skipped and read_eq would silently return nothing.
+    would be bloom-skipped and a point scan would silently return nothing.
     The manifest now records the column's Spark type; on a mismatch
     the bloom falls back to 'always keep' and the range stats (which
     can't order against the probe) are treated as undecidable."""
@@ -689,26 +706,26 @@ def test_point_lookup_type_mismatch_never_bloom_skips(spark, tmp_path):
     (d1,) = m["dirs"]
     assert m["stats"][d1]["bloom"]["x"]["type"] == "double"
     # int probe on double column: bloom unusable, dir must be KEPT.
-    kept, skipped = t.pruned_dirs_eq("x", 3)
+    kept, skipped = _dirs(t, {"x": [3]})
     assert kept == [d1] and skipped == []
-    got = {r["x"] for r in t.read_eq(spark, "x", 3).collect()}
+    got = {r["x"] for r in t.scan(spark, t.plan({"x": [3]})).collect()}
     assert got == {3.0}
     # str probe on double column likewise falls back to keep ('3' vs
     # Spark's '3.0' would never match the bitmap).
-    kept, skipped = t.pruned_dirs_eq("x", "3")
+    kept, skipped = _dirs(t, {"x": ["3"]})
     assert kept == [d1] and skipped == []
     # Matched types still prune: a bigint column, absent value skipped.
     t2 = TransactionalTable(str(tmp_path / "t2"))
     t2.commit(spark.range(0, 5), bloom_cols=["id"])
     m2 = t2._manifest(1)
     assert m2["stats"][m2["dirs"][0]]["bloom"]["id"]["type"] == "bigint"
-    kept, skipped = t2.pruned_dirs_eq("id", 999)
+    kept, skipped = _dirs(t2, {"id": [999]})
     assert kept == [] and len(skipped) == 1
 
 
 def test_pruned_dirs_eq_many_unions_per_probe_keeps(spark, tmp_path):
     """Batched IN-list point lookup: a dir is kept iff ANY probe may
-    hit it, the union equals the per-probe pruned_dirs_eq results, and
+    hit it, the union equals the per-probe plans' kept dirs, and
     the empty probe set keeps nothing (IN () matches no row)."""
     from pyspark.sql import functions as F
 
@@ -721,17 +738,17 @@ def test_pruned_dirs_eq_many_unions_per_probe_keeps(spark, tmp_path):
             bloom_cols=["id"],
         )
     d = t._manifest(3)["dirs"]
-    kept, skipped = t.pruned_dirs_eq_many("id", [3, 25, 25])
+    kept, skipped = _dirs(t, {"id": [3, 25, 25]})
     assert kept == [d[0], d[2]] and skipped == [d[1]]
     # Union contract vs the per-probe API.
     per = set()
     for v in (3, 25):
-        per.update(t.pruned_dirs_eq("id", v)[0])
+        per.update(_dirs(t, {"id": [v]})[0])
     assert set(kept) == per
-    kept, skipped = t.pruned_dirs_eq_many("id", [])
+    kept, skipped = _dirs(t, {"id": []})
     assert kept == [] and len(skipped) == 3
     with pytest.raises(TypeError, match="int or str"):
-        t.pruned_dirs_eq_many("id", [3, 1.5])
+        _dirs(t, {"id": [3, 1.5]})
 
 
 def test_read_changes_empty_table_has_clear_bootstrap_error(
@@ -760,7 +777,7 @@ def test_rewrites_can_restate_bloom(spark, tmp_path):
     v = t.compact(spark, target_files=1, stats_cols=["id"], bloom_cols=["id"])
     (d,) = t._manifest(v)["dirs"]
     assert "bloom" in t._manifest(v)["stats"][d]
-    kept, skipped = t.pruned_dirs_eq("id", 999)  # not in table
+    kept, skipped = _dirs(t, {"id": [999]})  # not in table
     assert kept == [] and skipped == [d]
     v = t.delete_where(
         spark, "id", lo=0, hi=9, stats_cols=["id"], bloom_cols=["id"]
@@ -773,8 +790,8 @@ def test_rewrites_can_restate_bloom(spark, tmp_path):
     )
     new_dir = t._manifest(v)["dirs"][-1]
     assert "bloom" in t._manifest(v)["stats"][new_dir]
-    kept, _ = t.pruned_dirs_eq("id", 10)
-    assert [r["id"] for r in t.read_eq(spark, "id", 10).collect()] == [10]
+    kept, _ = _dirs(t, {"id": [10]})
+    assert [r["id"] for r in t.scan(spark, t.plan({"id": [10]})).collect()] == [10]
 
 
 def test_incremental_consumer_equals_batch_over_change_feed(
@@ -824,7 +841,7 @@ def test_compact_clustered_restores_skipping_and_preserves_content(
         )
     # Unclustered: every dir spans ~[0, 89] -> a mid-range predicate
     # scans all three dirs.
-    kept, _ = t.pruned_dirs("id", lo=40, hi=45)
+    kept, _ = _dirs(t, {"id": (40, 45)})
     assert len(kept) == 3
     v = t.compact_clustered(
         spark, "id", n_buckets=3, stats_cols=["id"], bloom_cols=["id"]
@@ -838,13 +855,13 @@ def test_compact_clustered_restores_skipping_and_preserves_content(
     assert _ids(t.read(spark, 3)) == list(range(90))
     # Equal-width buckets: [0,29], [30,59], [60,89] — ranged read now
     # scans exactly one.
-    kept, skipped = t.pruned_dirs("id", lo=40, hi=45)
+    kept, skipped = _dirs(t, {"id": (40, 45)})
     assert len(kept) == 1 and len(skipped) == 2
-    assert _ids(t.read_pruned(spark, "id", lo=40, hi=45)) == list(range(40, 46))
+    assert _ids(t.scan(spark, t.plan({"id": (40, 45)}))) == list(range(40, 46))
     # Bloom restated per bucket: a point lookup scans one sub-dir.
-    kept, _ = t.pruned_dirs_eq("id", 7)
+    kept, _ = _dirs(t, {"id": [7]})
     assert len(kept) == 1
-    assert [r["id"] for r in t.read_eq(spark, "id", 7).collect()] == [7]
+    assert [r["id"] for r in t.scan(spark, t.plan({"id": [7]})).collect()] == [7]
     # Vacuum must NOT delete the live clustered snapshot (it is
     # referenced via sub-dir names) but reclaims the three old dirs.
     deleted = t.vacuum(keep_versions=1, grace_seconds=0)
@@ -963,7 +980,7 @@ def test_commit_partitioned_roundtrip_stats_and_null_partition(
     assert set(got.columns) == {"id", "cell"}
     assert _ids(got) == list(range(30))
     # id=1 lives only in cell 1's sub-dir; bloom+range keep exactly it.
-    kept, skipped = t.pruned_dirs_eq("id", 1, v)
+    kept, skipped = _dirs(t, {"id": [1]}, v)
     assert len(kept) == 1 and len(skipped) == 3
 
 
@@ -1047,7 +1064,7 @@ def test_schema_evolution_add_only(spark, tmp_path):
     rows = {r["id"]: r["score"] for r in t.read(spark).collect()}
     assert rows[10] is None and rows[9] == 18.0
     # Pruned reads apply the recorded schema too.
-    pr = t.read_pruned(spark, "id", lo=0, hi=4)
+    pr = t.scan(spark, t.plan({"id": (0, 4)}))
     assert set(pr.columns) == {"id", "score"}
     assert all(r["score"] is None for r in pr.collect())
     # Type change fails fast: no new snap dir appears.
@@ -1104,21 +1121,21 @@ def test_multi_column_pruning_intersects_conjuncts(spark, tmp_path):
     d = t._manifest(3)["dirs"]
     # id in [5, 25] keeps all three dirs; rev in [0, 9] keeps only the
     # LAST dir (ids 20-29 <-> rev 0-9). Conjunction keeps exactly one.
-    kept, skipped = t.pruned_dirs_multi({"id": (5, 25), "rev": (0, 9)})
+    kept, skipped = _dirs(t, {"id": (5, 25), "rev": (0, 9)})
     assert kept == [d[2]] and sorted(skipped) == sorted(d[:2])
-    got = t.read_pruned_multi(spark, {"id": (5, 25), "rev": (0, 9)})
+    got = t.scan(spark, t.plan({"id": (5, 25), "rev": (0, 9)}))
     assert _ids(got) == list(range(20, 26))
     # Order preserved; empty intersection yields typed empty.
-    empty = t.read_pruned_multi(spark, {"id": (0, 5), "rev": (0, 5)})
+    empty = t.scan(spark, t.plan({"id": (0, 5), "rev": (0, 5)}))
     assert empty.count() == 0 and set(empty.columns) == {"id", "rev"}
     with pytest.raises(ValueError, match="at least one predicate"):
-        t.pruned_dirs_multi({})
+        _dirs(t, {})
     # An unbounded conjunct prunes nothing and now raises explicitly
-    # (previously raised from the per-column pruned_dirs delegate).
+    # (previously raised from the per-column range delegate).
     with pytest.raises(ValueError, match="bounds neither side"):
-        t.pruned_dirs_multi({"id": (5, 25), "rev": (None, None)})
+        _dirs(t, {"id": (5, 25), "rev": (None, None)})
     with pytest.raises(ValueError, match="does not exist"):
-        t.pruned_dirs_multi({"id": (5, 25)}, version=99)
+        _dirs(t, {"id": (5, 25)}, 99)
 
 
 # -- deletion vectors (merge-on-read DELETE) --------------------------------
@@ -1286,8 +1303,8 @@ def test_delete_dv_on_clustered_subdirs_and_plain_read_is_joinfree(
     # Stats pruned the scan to the one bucket holding [25, 50).
     assert t.meta_of(v)["dv_target_dirs"] == 1
     assert _ids(t.read(spark)) == [i for i in range(100) if not 30 <= i <= 34]
-    # read_pruned composes: prune by stats, then anti-join the vector.
-    assert _ids(t.read_pruned(spark, "id", lo=28, hi=40)) == [
+    # A planned scan composes: prune by stats, then anti-join the vector.
+    assert _ids(t.scan(spark, t.plan({"id": (28, 40)}))) == [
         28, 29, 35, 36, 37, 38, 39, 40
     ]
     # A version with NO vectors plans a join-free scan (the DV read
@@ -1317,7 +1334,7 @@ def test_branch_stages_invisibly_and_publishes_atomically(spark, tmp_path):
     assert t._manifest(v)["mode"] == "append"
     assert _ids(t.read_changes(spark, 1, v)) == list(range(10, 20))
     # The publish carried the branch's stats (skipping works on main).
-    kept, skipped = t.pruned_dirs("id", lo=17, hi=19, version=v)
+    kept, skipped = _dirs(t, {"id": (17, 19)}, v)
     assert len(skipped) == 2
     # Zero data movement: publish wrote no new snap dirs.
     snaps = [d for d in os.listdir(t.path) if d.startswith("snap-")]
@@ -1427,12 +1444,12 @@ def test_compact_zordered_prunes_both_axes_and_preserves_content(
     assert 1 < len(m["dirs"]) <= 64
     # A small rectangle prunes to a handful of buckets; a single-axis
     # band prunes too (z bounds BOTH dimensions).
-    kept, skipped = t.pruned_dirs_multi({"x": (0, 12), "y": (0, 12)}, version=v)
+    kept, skipped = _dirs(t, {"x": (0, 12), "y": (0, 12)}, v)
     assert len(kept) <= 4 and len(skipped) >= len(m["dirs"]) - 4
-    ky, sy = t.pruned_dirs("y", lo=90, hi=99, version=v)
+    ky, sy = _dirs(t, {"y": (90, 99)}, v)
     assert len(sy) >= len(m["dirs"]) // 2
     # Content-preserving: same rows, same values.
-    got = t.read_pruned_multi(spark, {"x": (0, 12), "y": (0, 12)}, version=v)
+    got = t.scan(spark, t.plan({"x": (0, 12), "y": (0, 12)}, v))
     assert got.count() == 13 * 13
     assert t.read(spark, v).count() == 10_000
     assert [r["v"] for r in t.read(spark, v).filter("x=5 and y=5").collect()] == [505]
@@ -2234,7 +2251,7 @@ def test_restore_carries_dv_and_stats(spark, tmp_path):
     t.commit(spark.range(100, 103), mode="overwrite")  # v3: wipes it
     v_r = t.restore(2)                                 # v4
     assert _ids(t.read(spark, v_r)) == list(range(6))  # DV honored
-    kept, skipped = t.pruned_dirs_eq("id", 3, version=v_r)
+    kept, skipped = _dirs(t, {"id": [3]}, v_r)
     assert kept and not skipped  # single dir holds 3; stats carried
 
 
@@ -2298,9 +2315,9 @@ def test_hidden_partition_month_prune(spark, tmp_path):
     assert m["meta"]["partition_transform"] == "month"
     assert m["specs"] == [{"col": "d", "transform": "month"}]
     lo, hi = dt.date(2024, 3, 1), dt.date(2024, 4, 30)
-    kept, skipped = t.pruned_dirs_part("d", lo, hi)
+    kept, skipped = _dirs(t, {"d": (lo, hi)})
     assert skipped and len(kept) == 2  # March + April dirs only
-    got = _ids(t.read_pruned_part(spark, "d", lo, hi))
+    got = _ids(t.scan(spark, t.plan({"d": (lo, hi)})))
     want = _ids(df.filter((df.d >= lo) & (df.d <= hi)))
     assert got == want and got  # non-trivial and identical
 
@@ -2340,11 +2357,11 @@ def test_partition_evolution_reads_and_prunes_across_specs(spark, tmp_path):
     # A range prune spanning the spec boundary keeps dirs from BOTH
     # layouts and equals the filtered full read.
     lo, hi = dt.date(2024, 4, 1), dt.date(2024, 8, 31)
-    kept, skipped = t.pruned_dirs_part("d", lo, hi)
+    kept, skipped = _dirs(t, {"d": (lo, hi)})
     day_kept = [d for d in kept if m["dir_spec"][d] == 0]
     month_kept = [d for d in kept if m["dir_spec"][d] == 1]
     assert day_kept and month_kept and skipped
-    got = _ids(t.read_pruned_part(spark, "d", lo, hi))
+    got = _ids(t.scan(spark, t.plan({"d": (lo, hi)})))
     want = _ids(df.filter((df.d >= lo) & (df.d <= hi)))
     assert got == want and got
 
@@ -2388,7 +2405,7 @@ def test_bucket_point_lookup_prunes_to_one_dir(spark, tmp_path):
     assert len(kept) == 1 and len(skipped) == 7
     assert [r[0] for r in t.read_eq_part(spark, "k", 37).collect()] == [37]
     # Ranges cannot prune a bucket layout (non-monotone) — all kept.
-    kept_r, skipped_r = t.pruned_dirs_part("k", lo=10, hi=12)
+    kept_r, skipped_r = _dirs(t, {"k": (10, 12)})
     assert len(kept_r) == 8 and not skipped_r
 
 
@@ -2406,13 +2423,13 @@ def test_layout_prune_composes_with_stats_and_skips_null_partition(
     # Predicate on the NON-partition column: layout undecidable, stats
     # cannot split within one snapshot write here (per-dir stats exist),
     # so pruning falls to per-dir id ranges — sound either way.
-    kept, _ = t.pruned_dirs_part("id", lo=0, hi=29)
-    got = _ids(t.read_pruned_part(spark, "id", 0, 29))
+    kept, _ = _dirs(t, {"id": (0, 29)})
+    got = _ids(t.scan(spark, t.plan({"id": (0, 29)})))
     assert got == list(range(30))  # NULL-grp row has id 29, still read
     # Predicate on the partition column skips the NULL dir.
-    kept2, skipped2 = t.pruned_dirs_part("grp", lo=1, hi=1)
+    kept2, skipped2 = _dirs(t, {"grp": (1, 1)})
     assert len(kept2) == 1 and len(skipped2) == 3  # grp 0,2 + NULL dir
-    assert _ids(t.read_pruned_part(spark, "grp", 1, 1)) == [
+    assert _ids(t.scan(spark, t.plan({"grp": (1, 1)}))) == [
         i for i in range(29) if i % 3 == 1
     ]
 
@@ -2446,7 +2463,9 @@ def test_vacuum_after_partition_evolution(spark, tmp_path):
     assert m["specs"] == [{"col": "d", "transform": "month"}]
     import datetime as dt
 
-    got = _ids(t.read_pruned_part(spark, "d", dt.date(2024, 3, 1), dt.date(2024, 4, 30)))
+    got = _ids(
+        t.scan(spark, t.plan({"d": (dt.date(2024, 3, 1), dt.date(2024, 4, 30))}))
+    )
     want = _ids(
         df.filter((df.d >= dt.date(2024, 3, 1)) & (df.d <= dt.date(2024, 4, 30)))
     )
@@ -2469,6 +2488,86 @@ def test_restore_carries_partition_specs(spark, tmp_path):
     kept, skipped = t.pruned_dirs_part_eq("k", 37, version=v)
     assert len(kept) == 1 and len(skipped) == 7
     assert [r[0] for r in t.read_eq_part(spark, "k", 37, version=v).collect()] == [37]
+
+
+@pytest.mark.parametrize("transform", ["bucket[8]", "truncate[3]"])
+def test_layout_pruning_survives_a_dv_delete(spark, tmp_path, transform):
+    """A DV delete carries its dirs verbatim, so it must carry the
+    transform and spec list too: read as identity keys, a bucket or
+    truncate layout makes every plan — and every write that prunes —
+    skip dirs that hold matching rows."""
+    t = TransactionalTable(str(tmp_path / "t"))
+    t.commit_partitioned(spark, spark.range(0, 40), "id", transform=transform)
+    v = t.delete_where_dv(spark, "id", lo=0, hi=0)
+    m = t._manifest(v)
+    assert m["meta"]["partition_transform"] == transform
+    assert m["specs"] == [{"col": "id", "transform": transform}]
+    full = t.read(spark, v)
+    assert _ids(t.scan(spark, t.plan({"id": [7]}))) == [7]
+    assert _ids(t.scan(spark, t.plan({"id": [0, 7, 39]}))) == [7, 39]
+    assert _ids(t.scan(spark, t.plan({"id": (10, 12)}))) == _ids(
+        full.filter((full.id >= 10) & (full.id <= 12))
+    ) == [10, 11, 12]
+    t.delete_where(spark, "id", lo=10, hi=12)
+    assert _ids(t.read(spark)) == [i for i in range(1, 40) if not 10 <= i <= 12]
+
+
+def test_layout_proof_needs_a_recorded_transform(spark, tmp_path):
+    """A partitioned manifest without a spec list proves identity keys
+    only when it records the identity transform; otherwise the layout
+    proves nothing and every dir is kept."""
+    t = TransactionalTable(str(tmp_path / "t"))
+    v = t.commit_partitioned(spark, spark.range(0, 40), "id", transform="bucket[8]")
+    m = t._manifest(v)
+    legacy = {k: m[k] for k in ("dirs", "meta")}
+    assert t._dir_specs({**legacy, "meta": {"partitioned_by": "id"}}) is None
+    assert t._dir_specs(legacy) is None  # records bucket[8], no specs
+    ident = {**legacy, "meta": {"partitioned_by": "id",
+                                "partition_transform": "identity"}}
+    assert set(t._dir_specs(ident)) == set(m["dirs"])
+    assert len(t._prune({**m, "stats": {}}, {"id": [7]})[0]) == 1
+    kept, skipped = t._prune(
+        {**m, "stats": {}, "specs": None, "dir_spec": None}, {"id": [7]}
+    )
+    assert kept == m["dirs"] and skipped == []
+
+
+def test_temporal_string_values_prune_only_in_iso_form(spark, tmp_path):
+    """Temporal min/max stats are ISO text, so a string Spark casts to
+    the same date or timestamp but spelled otherwise ("2024-1-5",
+    "2024-01-05 10:00:00"), or a datetime against a date column, must
+    keep the dir instead of comparing as text."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    t = TransactionalTable(str(tmp_path / "t"))
+    df = spark.range(31).select(
+        "id",
+        F.date_add(F.lit("2024-01-01").cast("date"), F.col("id").cast("int"))
+        .alias("d"),
+        (F.lit("2024-01-01 10:00:00").cast("timestamp")
+         + F.expr("make_interval(0, 0, 0, cast(id as int))")).alias("ts"),
+    )
+    t.commit(df, stats_cols=["d", "ts"])
+    full = t.read(spark)
+    assert _ids(full.filter(F.col("d") == "2024-1-5")) == [4]
+    for where in (
+        {"d": ["2024-1-5"]},
+        {"d": ("2024-1-5", "2024-1-5")},
+        {"d": (dt.datetime(2024, 1, 31), None)},
+        {"ts": ["2024-01-05 10:00:00"]},
+        {"ts": (None, "2024-01-01 10:00:00")},
+    ):
+        want = _ids(_filtered(full, where))
+        assert want and _ids(t.scan(spark, t.plan(where))) == want, where
+    # The ISO forms themselves still prune.
+    for where in (
+        {"d": ["2024-02-05"]},
+        {"d": (dt.date(2024, 2, 1), None)},
+        {"ts": ["2024-02-05T10:00:00"]},
+    ):
+        assert _dirs(t, where)[0] == [], where
 
 
 def test_delete_where_part_drops_interior_rewrites_boundary(spark, tmp_path):
@@ -2608,10 +2707,10 @@ def test_clone_carries_stats_dv_and_constraints(spark, tmp_path):
     # DV rides across the root boundary (row addresses are relative).
     assert _ids(clone.read(spark)) == [0, 1, 4, 5] + list(range(6, 12))
     # Range stats prune inherited dirs from the clone's reads.
-    kept, skipped = clone.pruned_dirs("id", lo=7, hi=8)
+    kept, skipped = _dirs(clone, {"id": (7, 8)})
     assert len(kept) == 1 and len(skipped) == 1
     # Bloom bits survive the re-key: a point probe prunes too.
-    keptb, skippedb = clone.pruned_dirs_eq("id", 7)
+    keptb, skippedb = _dirs(clone, {"id": [7]})
     assert len(keptb) == 1 and len(skippedb) == 1
     # Constraints gate clone commits exactly as they did on the source.
     with pytest.raises(ValueError, match="id_nonneg"):
@@ -2800,11 +2899,11 @@ def test_analyze_backfills_only_missing_and_is_idempotent(spark, tmp_path):
     t.commit(spark.range(0, 5), stats_cols=["id"])
     t.commit(spark.range(5, 10), mode="append")  # stats-less
     t.commit(spark.range(10, 15), mode="append", stats_cols=["id"])
-    kept, skipped = t.pruned_dirs("id", lo=12, hi=13)
+    kept, skipped = _dirs(t, {"id": (12, 13)})
     assert len(kept) == 2  # true match + the unknown dir
     v = t.analyze(spark, stats_cols=["id"])
     assert t.meta_of(v)["analyzed_dirs"] == 1
-    kept2, skipped2 = t.pruned_dirs("id", lo=12, hi=13)
+    kept2, skipped2 = _dirs(t, {"id": (12, 13)})
     assert len(kept2) == 1 and len(skipped2) == 2
     # Same dirs, same data — analyze is metadata-only.
     assert t._manifest(v)["dirs"] == t._manifest(v - 1)["dirs"]
@@ -2820,7 +2919,7 @@ def test_analyze_backfills_bloom_and_preserves_dv(spark, tmp_path):
     t.delete_where_dv(spark, "id", lo=2, hi=3)
     v = t.analyze(spark, stats_cols=["id"], bloom_cols=["id"])
     assert t.meta_of(v)["analyzed_dirs"] == 2  # both lacked bloom
-    keptb, skippedb = t.pruned_dirs_eq("id", 12)
+    keptb, skippedb = _dirs(t, {"id": [12]})
     assert len(keptb) == 1 and len(skippedb) == 1
     # The deletion vector rides across the metadata-only version.
     assert _ids(t.read(spark)) == [0, 1] + list(range(4, 16))
@@ -3078,9 +3177,9 @@ def test_commit_stats_match_readback(spark, tmp_path):
     assert m["stats"][v1_dir]["cols"]["hole"] == [None, None]
     # Stats-driven pruning still works end to end on the observed stats:
     # [95, 99] intersects both dirs; [101, 200] prunes both.
-    kept, skipped = t._range_prune(m, "id", 95, 99)
+    kept, skipped = t._prune(m, {"id": (95, 99)})
     assert len(kept) == 2 and skipped == []
-    kept, skipped = t._range_prune(m, "id", 101, 200)
+    kept, skipped = t._prune(m, {"id": (101, 200)})
     assert kept == [] and len(skipped) == 2
 
 

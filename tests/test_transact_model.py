@@ -113,8 +113,8 @@ class TableMachine(RuleBasedStateMachine):
         )
 
     @precondition(lambda self: self.t.current_version() > 0)
-    @rule(n=st.integers(1, 4), reuse=st.booleans())
-    def merge(self, n, reuse):
+    @rule(n=st.integers(1, 4), reuse=st.booleans(), eq=st.booleans())
+    def merge(self, n, reuse, eq):
         state = self._cur()
         if reuse and state:
             keys = sorted(state)[:n]
@@ -122,7 +122,12 @@ class TableMachine(RuleBasedStateMachine):
             self.counter += 1
         else:
             rows = self._fresh_rows(n)
-        v = self.t.merge_rows(_SPARK, _df(rows), key="id", stats_cols=["id"])
+        if eq:  # merge-on-read: an equality-delete file plus the rows
+            v = self.t.upsert_eq(_SPARK, _df(rows), "id", stats_cols=["id"])
+        else:
+            v = self.t.merge_rows(
+                _SPARK, _df(rows), key="id", stats_cols=["id"]
+            )
         state.update(rows)
         self._record(v, state)
 
@@ -297,48 +302,80 @@ class TableMachine(RuleBasedStateMachine):
         v = self.t.rewrite_partitioned(_SPARK, stats_cols=["id"])
         self._record(v, state)
 
-    @precondition(lambda self: self._cur_spec() is not None)
-    @rule(frac=st.tuples(st.floats(0, 1), st.floats(0, 1)))
-    def pruned_part_read_matches_filter(self, frac):
-        """Layout pruning on the head must equal a plain filter over
-        the model for every spec kind, single or evolved/mixed."""
-        state = self._cur()
-        if not state:
-            return
-        ids = sorted(state)
-        a = ids[int(frac[0] * (len(ids) - 1))]
-        b = ids[int(frac[1] * (len(ids) - 1))]
-        lo, hi = min(a, b), max(a, b)
-        got = {
-            r["id"]: r["payload"]
-            for r in self.t.read_pruned_part(
-                _SPARK, "id", lo, hi
-            ).collect()
-        }
-        want = {k: p for k, p in state.items() if lo <= k <= hi}
-        assert got == want, (lo, hi, got, want)
-
-    @precondition(lambda self: bool(self.model))
-    @rule(pick=st.floats(0, 1), key=st.floats(0, 1.2))
-    def point_read_matches_model(self, pick, key):
-        """A point read of a random key (present or absent) on a random
-        live version — served on the driver or, under deletes, scanned
-        by Spark — returns exactly the model's row, with the schema of
-        a full read of that version. Partitioned versions also go
-        through the layout prune (``read_eq_part``)."""
+    def _plan_scan_matches_model(self, pick, where) -> int:
+        """``scan(plan(where))`` on a random live version, partitioned
+        or not and under any deletes, returns exactly the model's rows
+        that ``where`` selects, with the schema of a full read, and the
+        plan's ``kept`` and ``skipped`` partition the version's dirs.
+        Returns the version."""
         versions = sorted(self.model)
         v = versions[int(pick * (len(versions) - 1))]
-        k = int(key * self.next_id)
-        state = self.model[v]
-        want = {k: state[k]} if k in state else {}
-        reads = [self.t.read_eq(_SPARK, "id", k, version=v)]
-        if self.t._dir_specs(self.t._manifest(v)) is not None:
-            reads.append(self.t.read_eq_part(_SPARK, "id", k, version=v))
-        schema = self.t.read(_SPARK, v).schema
-        for df in reads:
+        plan = self.t.plan(where, v)
+        dirs = self.t._manifest(v)["dirs"]
+        assert sorted(plan.kept + plan.skipped) == sorted(dirs), (v, plan)
+        assert not set(plan.kept) & set(plan.skipped), (v, plan)
+
+        def selected(k, p):
+            for col, pred in where.items():
+                x = k if col == "id" else p
+                if isinstance(pred, list):
+                    if x not in pred:
+                        return False
+                elif (pred[0] is not None and x < pred[0]) or (
+                    pred[1] is not None and x > pred[1]
+                ):
+                    return False
+            return True
+
+        df = self.t.scan(_SPARK, plan)
+        got = {r["id"]: r["payload"] for r in df.collect()}
+        want = {k: p for k, p in self.model[v].items() if selected(k, p)}
+        assert got == want, (v, where, got, want)
+        assert df.schema == self.t.read(_SPARK, v).schema, (v, df.schema)
+        return v
+
+    @precondition(lambda self: bool(self.model))
+    @rule(
+        pick=st.floats(0, 1),
+        ids=st.tuples(st.floats(0, 1.2), st.floats(0, 1.2)),
+        open_side=st.sampled_from([None, 0, 1]),
+        payload=st.one_of(
+            st.none(), st.tuples(st.floats(0, 1), st.floats(0, 1))
+        ),
+    )
+    def pruned_part_read_matches_filter(self, pick, ids, open_side, payload):
+        """A range on ``id`` (one side possibly open), alone or AND a
+        range on ``payload``: layout, stats and the residual filter
+        together equal a plain filter over the model, for every spec
+        kind, single or evolved/mixed."""
+        bounds = sorted(int(f * self.next_id) for f in ids)
+        if open_side is not None:
+            bounds[open_side] = None
+        where = {"id": tuple(bounds)}
+        if payload is not None:
+            top = max(
+                (p for s in self.model.values() for p in s.values()),
+                default=0,
+            )
+            where["payload"] = tuple(sorted(int(f * top) for f in payload))
+        self._plan_scan_matches_model(pick, where)
+
+    @precondition(lambda self: bool(self.model))
+    @rule(pick=st.floats(0, 1), keys=st.lists(st.floats(0, 1.2), max_size=4))
+    def point_read_matches_model(self, pick, keys):
+        """An IN of 0-4 keys, present or absent, on a random live
+        version — served on the driver or, under deletes, scanned by
+        Spark. One key also goes through ``read_eq_part``, the term
+        lookup's entry point."""
+        ids = [int(k * self.next_id) for k in keys]
+        v = self._plan_scan_matches_model(pick, {"id": ids})
+        if len(ids) == 1:
+            df = self.t.read_eq_part(_SPARK, "id", ids[0], version=v)
             got = {r["id"]: r["payload"] for r in df.collect()}
-            assert got == want, (v, k, got, want)
-            assert df.schema == schema, (v, df.schema, schema)
+            state = self.model[v]
+            want = {ids[0]: state[ids[0]]} if ids[0] in state else {}
+            assert got == want, (v, ids, got, want)
+            assert df.schema == self.t.read(_SPARK, v).schema
 
     @invariant()
     def every_live_version_reads_back_exactly(self):
