@@ -900,9 +900,11 @@ def ingest_signatures(
     Two paths, one result. A ``(doc_id, text)`` that passes the
     driver-path gate (``operators/driver.py``), with a string ``text``
     and an integral or string ``doc_id``, is hashed in the driver
-    process (:func:`_signatures_on_driver`): one ``toArrow`` read, each
-    distinct shingle hashed once, and a local relation back. Any other
-    input takes the Spark plan below, which the driver path replays."""
+    process (:func:`_signatures_on_driver`): one read
+    (``driver.collect_small``: from the parquet files of a plain scan,
+    else from a Spark job), each distinct shingle hashed once, and a
+    local relation back. Any other input takes the Spark plan below,
+    which the driver path replays."""
     served = _signatures_on_driver(docs, k, n_hashes, rows_per_band)
     if served is not None:
         return served
@@ -949,12 +951,14 @@ def ingest_dedup_against(
     the state buckets the batch touches. When both inputs pass the
     driver-path gate (``operators/driver.py``), the probe runs in the
     driver process (:func:`_dedup_on_driver`): each input is read once
-    with ``toArrow`` (a batch that ``ingest_signatures`` hashed on the
-    driver is not read again) and the plan is replayed in Arrow, with a
-    local relation back. Any other input takes the Spark plan below. It
-    reads the whole state twice, once for the bucket census and once
-    for the agreement join, and evaluates the batch's plan twice, so a
-    lazy batch is hashed twice."""
+    by ``driver.collect_small`` (from its parquet files when it is a
+    plain scan of them, such as a delete-free version of a
+    transactional table, else from a Spark job; a batch that
+    ``ingest_signatures`` hashed on the driver is not read again) and
+    the plan is replayed in Arrow, with a local relation back. Any other
+    input takes the Spark plan below. It reads the whole state twice,
+    once for the bucket census and once for the agreement join, and
+    evaluates the batch's plan twice, so a lazy batch is hashed twice."""
     served = _dedup_on_driver(state_sigs, batch_sigs, n_hashes, threshold, max_bucket)
     if served is not None:
         return served

@@ -8,11 +8,15 @@ be within ``spark.sql.autoBroadcastJoinThreshold``, the size Spark
 already ships through the driver for one side of a broadcast join; -1
 turns the path off. The estimate can be far too low (Spark counts a
 string column as 20 bytes whatever its length), so the bytes are
-counted again as they are collected, and a relation over the same
-threshold is dropped for the Spark plan as soon as the count passes it:
-a read of about the threshold wasted, and only where the estimate was
-wrong. The answer goes back as a local relation, so collecting it runs
-no Spark job.
+counted again as they are read, and a relation over the same threshold
+is dropped for the Spark plan as soon as the count passes it: a read of
+about the threshold wasted, and only where the estimate was wrong.
+
+An input that is a plain scan of local parquet files is read straight
+from them with ``pyarrow.dataset`` (:func:`read_parquet`), with no Spark
+job; any other input is collected from a Spark job as ``toArrow``
+collects it. The answer goes back as a local relation, so collecting
+it runs no Spark job.
 """
 
 from __future__ import annotations
@@ -21,6 +25,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+# Column types whose parquet values pyarrow reads as Spark's scan does.
+# Dates and timestamps depend on the calendar-rebase settings and the
+# writer's file metadata, so they, decimals and nested types take the
+# Spark job.
+_FILE_TYPES = (T.BooleanType, *_INTEGRAL, T.FloatType, T.DoubleType, T.StringType, T.BinaryType)
+_LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
 
 
 def is_integral(t: T.DataType) -> bool:
@@ -63,13 +75,22 @@ def collect_small(rel: DataFrame):
     """The rows of a :func:`small_relation` as an Arrow table, or None
     when they take more bytes than the threshold.
 
-    The rows are read as ``toArrow`` reads them, as a stream of Arrow
-    batches from the job, but the read stops at the first batch past the
-    threshold and the job's remaining tasks are cancelled: an estimate
-    that was wrong costs the threshold plus the task results already in
-    flight, not the whole relation. A job that fails on
-    ``spark.driver.maxResultSize`` also gives None, so the Spark plan
-    runs instead."""
+    A relation whose optimized plan is a plain scan of local parquet
+    files (:func:`_plain_parquet_files`) is read from them on the driver
+    (:func:`read_parquet`), with no Spark job. The read takes no more
+    than ``spark.driver.maxResultSize`` either, the most a collect may
+    bring back. When a file's footer does not carry every column under
+    its exact name and type, or pyarrow raises on a file, the rows are
+    collected from a Spark job instead, so Spark's own schema
+    resolution, ``ignoreCorruptFiles``, ``ignoreMissingFiles`` and
+    errors hold.
+
+    The job read collects a stream of Arrow batches, as ``toArrow``
+    does, but stops at the first batch past the threshold and cancels
+    the job's remaining tasks: an estimate that was wrong costs the
+    threshold plus the task results already in flight, not the whole
+    relation. A job that fails on ``spark.driver.maxResultSize`` also
+    gives None, so the Spark plan runs instead."""
     import uuid
 
     import pyarrow as pa
@@ -82,7 +103,19 @@ def collect_small(rel: DataFrame):
     table = getattr(rel, "_driver_table", None)
     if table is not None:
         return table if table.nbytes <= limit else None
+    schema = to_arrow_schema(
+        rel.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=rel.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
     sc = rel.sparkSession.sparkContext
+    files = _plain_parquet_files(rel) if limit >= 0 else None
+    if files is not None:
+        max_result = sc._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
+        try:
+            return read_parquet(files, schema, limit=min(limit, max_result or limit), exact=True)
+        except Exception:  # a footer that differs, or a file pyarrow cannot read
+            pass
     tag = f"driver-collect-{uuid.uuid4().hex}"
     sc.addJobTag(tag)  # inherited by the thread that runs the job
     try:
@@ -114,14 +147,93 @@ def collect_small(rel: DataFrame):
             over = True
     if over:
         return None
-    schema = to_arrow_schema(
-        rel.schema,
-        error_on_duplicated_field_names_in_struct=True,
-        prefers_large_types=rel.sparkSession._jconf.arrowUseLargeVarTypes(),
-    )
     if not batches:
         return schema.empty_table()
     return pa.Table.from_batches([batches[i] for i in order]).cast(schema)
+
+
+def _plain_parquet_files(rel: DataFrame) -> list[str] | None:
+    """The local paths of the files ``rel`` reads when its optimized plan
+    is a plain scan of them, else None: an unpartitioned V1 parquet
+    relation, bare or under a projection of its own columns, each of a
+    type in ``_FILE_TYPES`` and a column of the files' data schema (not
+    ``_metadata``), listed under ``file:`` URIs. A filter, a computed
+    column, partition columns, a V2 or streaming scan and any other
+    plan give None."""
+    from urllib.parse import unquote, urlparse
+
+    plan = rel._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "Project":
+        cols = plan.projectList()
+        if any(
+            cols.apply(i).getClass().getSimpleName() != "AttributeReference"
+            for i in range(cols.size())
+        ):
+            return None
+        plan = plan.child()
+    if plan.getClass().getName() != _LOGICAL_RELATION or plan.isStreaming():
+        return None
+    fs = plan.relation()
+    if (
+        fs.getClass().getName() != _FS_RELATION
+        or fs.fileFormat().getClass().getName() != _PARQUET
+        or not fs.partitionSchema().isEmpty()
+    ):
+        return None
+    data = set(fs.dataSchema().fieldNames())
+    if not all(f.name in data and isinstance(f.dataType, _FILE_TYPES) for f in rel.schema.fields):
+        return None
+    files = []
+    for uri in rel.inputFiles():
+        u = urlparse(uri)
+        if u.scheme != "file" or u.netloc not in ("", "localhost"):
+            return None
+        files.append(unquote(u.path))
+    return files
+
+
+def _plain_type(t):
+    import pyarrow as pa
+
+    return {pa.large_string(): pa.string(), pa.large_binary(): pa.binary()}.get(t, t)
+
+
+def read_parquet(files, schema, filter=None, limit: int | None = None, exact: bool = False):
+    """The rows of the parquet ``files`` as an Arrow table of ``schema``,
+    read with ``pyarrow.dataset`` one file at a time: the columns of
+    ``schema`` cast to it, a file without one reading it as nulls, and
+    only the rows that pass ``filter`` (an Arrow expression) when given.
+    None once the batches read take more than ``limit`` bytes; the read
+    stops there. With ``exact``, each file's footer must carry every
+    column of ``schema`` under its exact name, and no other name that
+    differs from it only in case, with the same Arrow type (``string``
+    and ``large_string`` count as equal), else ``ValueError`` is
+    raised."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    batches, size = [], 0
+    for fragment in ds.dataset(files, schema=schema, format="parquet").get_fragments():
+        if exact:
+            footer = fragment.physical_schema
+            lower = [n.lower() for n in footer.names]
+            for field in schema:
+                i = footer.get_field_index(field.name)
+                if (
+                    i < 0
+                    or lower.count(field.name.lower()) != 1
+                    or _plain_type(footer.field(i).type) != _plain_type(field.type)
+                ):
+                    raise ValueError(f"{fragment.path} does not carry {field}")
+        for batch in fragment.to_batches(schema=schema, columns=schema.names, filter=filter):
+            size += batch.nbytes
+            if limit is not None and size > limit:
+                return None
+            if batch.num_rows:
+                batches.append(batch)
+    if not batches:
+        return schema.empty_table()
+    return pa.Table.from_batches(batches, schema)
 
 
 def local_relation(spark, table, schema: T.StructType) -> DataFrame:

@@ -163,12 +163,14 @@ def bm25_multi_topk(
     the collected bytes within ``spark.sql.autoBroadcastJoinThreshold``,
     -1 turns it off), with a string ``text`` and an integral or string
     ``doc_id``, is scored on the driver (:func:`_bm25_on_driver`): it is
-    collected once with ``toArrow``, tokenized and counted with Arrow and
-    numpy, and the top k come back as a local relation, so collecting
-    the result runs no job. Any other corpus takes the Spark plan: one
-    per-doc aggregate yields dl and one conditional tf per query term,
-    one tiny stats aggregate yields every df plus avgdl, and the top k
-    go through TakeOrderedAndProject before being ranked. That plan
+    read once (``driver.collect_small``: from its parquet files when it
+    is a plain scan of them, else collected from a Spark job),
+    tokenized and counted with Arrow and numpy, and the top k come back
+    as a local relation, so collecting the result runs no job. Any
+    other corpus takes the Spark plan: one per-doc aggregate yields dl
+    and one conditional tf per query term, one tiny stats aggregate
+    yields every df plus avgdl, and the top k go through
+    TakeOrderedAndProject before being ranked. That plan
     scans the corpus twice (the tokenized per-doc aggregate and a
     column-less count for ``n_docs``) and reads the per-doc shuffle
     twice, once for the stats and once for scoring: about four corpus

@@ -888,14 +888,20 @@ def _disjoint(cmin, cmax, lo, hi) -> bool:
 
 def _filtered(df: DataFrame, where: dict) -> DataFrame:
     """``df`` filtered on a ``plan`` predicate: the residual that turns
-    every pruning false positive into scan cost, never a wrong row."""
+    every pruning false positive into scan cost, never a wrong row. An
+    IN list is an OR of equalities, so every value is coerced as
+    ``col == value`` coerces it whatever the list's length (Spark's
+    ``isin`` compares a date column with a string as strings, ``==``
+    casts the string to a date)."""
+    from functools import reduce
+    from operator import or_
+
     from pyspark.sql import functions as F
 
     for col, pred in where.items():
         c = F.col(col)
         if isinstance(pred, list):
-            one = len(pred) == 1
-            df = df.filter(c == F.lit(pred[0]) if one else c.isin(pred))
+            df = df.filter(reduce(or_, (c == F.lit(v) for v in pred), F.lit(False)))
             continue
         lo, hi = pred
         if lo is not None:
@@ -1377,7 +1383,7 @@ class TransactionalTable:
         """The rows of ``manifest``'s ``kept`` dirs with ``col IN
         values`` (equality for one value): ``scan``'s point read. A
         slice the driver can serve exactly (``_driver_files``) is read
-        with ``pyarrow.dataset`` and handed back as a local relation,
+        with ``driver.read_parquet`` and handed back as a local relation,
         so collecting it launches no Spark job. Anything else is the
         ``_read_dirs`` scan plus the residual filter, which turns a
         Bloom false positive into scan cost, never a wrong row. An
@@ -1392,24 +1398,15 @@ class TransactionalTable:
         import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        from mapreduceindexer_spark.operators import driver
+
         schema, files = served
         arrow_schema = to_arrow_schema(schema)
-        if not files:
-            # Not a dataset of no files: its columns have no chunks,
-            # which createDataFrame rejects.
-            table = arrow_schema.empty_table()
-        else:
-            key_type = arrow_schema.field(col).type
-            key = ds.field(col)
-            dataset = ds.dataset(files, schema=arrow_schema, format="parquet")
-            # One chunk: createDataFrame drops every row after the first
-            # empty record batch, and each file the filter emptied is one.
-            table = dataset.to_table(
-                filter=key == pa.scalar(values[0], key_type)
-                if len(values) == 1
-                else key.isin(pa.array(values, key_type))
-            ).combine_chunks()
-        return spark.createDataFrame(table, schema=schema)
+        key_values = pa.array(values, arrow_schema.field(col).type)
+        table = driver.read_parquet(
+            files, arrow_schema, filter=ds.field(col).isin(key_values)
+        )
+        return driver.local_relation(spark, table, schema)
 
     def _driver_files(
         self, spark: SparkSession, manifest: dict, kept, col: str, values: list

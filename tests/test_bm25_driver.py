@@ -235,6 +235,24 @@ def test_driver_result_collects_without_a_job(spark, docs):
     assert sc.statusTracker().getJobIdsForGroup("bm25-driver-probe") == []
 
 
+def test_parquet_corpus_is_read_from_its_files(spark, docs):
+    """A corpus that is a plain scan of a parquet directory is read from
+    its files: scoring it and collecting the top k run no Spark job, and
+    the rows are the Spark plan's."""
+    from mapreduceindexer_spark.operators.search import bm25_multi_topk
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bm25-driver-files", "bm25 over a parquet directory")
+    try:
+        df, served = _scored(lambda: bm25_multi_topk(docs, ["alpha", "tie"], k=10))
+        rows = [tuple(r) for r in df.collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert served
+    assert sc.statusTracker().getJobIdsForGroup("bm25-driver-files") == []
+    assert _both(spark, lambda: bm25_multi_topk(docs, ["alpha", "tie"], k=10)) == rows
+
+
 def test_half_up_rounding_matches_spark_round(spark):
     """Spark's round(x, 6) on doubles near and on half-way points, where
     the JVM's decimal digits decide."""

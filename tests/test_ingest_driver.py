@@ -10,6 +10,7 @@ and which path ran."""
 from __future__ import annotations
 
 import random
+import uuid
 from contextlib import contextmanager
 
 import pytest
@@ -333,9 +334,15 @@ def _max_result_size(spark, value):
 
 def test_result_size_failure_falls_back(spark, docs):
     """A collect that fails on ``spark.driver.maxResultSize`` sends the
-    call to the Spark plan, whose rows it then returns."""
+    call to the Spark plan, whose rows it then returns. The filter keeps
+    every row but makes the input more than a scan of its files, so it
+    is collected from a Spark job (a plain scan is read from the files,
+    under the same bound: ``tests/test_driver_files.py``)."""
+    from pyspark.sql import functions as F
+
     from mapreduceindexer_spark.operators import dedup as dd
 
+    docs = docs.filter(F.col("doc_id") > 0)
     with _max_result_size(spark, "1k"):
         fast, calls = _traced(lambda: dd.ingest_signatures(docs))
     assert calls == {"_signatures_on_driver": [False], "_dedup_on_driver": []}
@@ -355,6 +362,44 @@ def test_driver_result_collects_without_a_job(spark, docs):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("ingest-driver-probe") == []
+
+
+def _jobs(spark, make) -> tuple:
+    """(result of ``make()``, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"ingest-driver-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ingest driver path")
+    try:
+        out = make()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_parquet_inputs_are_read_from_their_files(spark, docs, tmp_path):
+    """Documents and persisted signatures that are plain scans of parquet
+    directories are read from their files: hashing, probing and
+    collecting the answer run no Spark job, and the rows are the Spark
+    plan's."""
+    from mapreduceindexer_spark.operators import dedup as dd
+
+    batch = _parquet(spark, tmp_path, [(20, _text(8)), (21, TEXTS[0][1]), (22, _text(99))], name="b")
+    state_dir, batch_dir = str(tmp_path / "state_sigs"), str(tmp_path / "batch_sigs")
+    dd.ingest_signatures(docs).write.parquet(state_dir)
+    dd.ingest_signatures(batch).write.parquet(batch_dir)
+
+    # Reading a directory without a schema infers it with a Spark job,
+    # so the reads are made before the jobs are counted.
+    state_sigs, batch_sigs = spark.read.parquet(state_dir), spark.read.parquet(batch_dir)
+
+    def probe():
+        return dd.ingest_dedup_against(state_sigs, batch_sigs)
+
+    for make in (_probe(docs, batch), probe):
+        rows, n_jobs = _jobs(spark, lambda: _rows(make()))
+        assert n_jobs == 0
+        assert _both(spark, make) == rows
+        assert {r[0] for r in rows} >= {20, 21}
 
 
 def test_best_est_rounds_half_up_like_spark(spark, tmp_path):
@@ -413,6 +458,15 @@ def test_probe_across_state_table_versions(spark, tmp_path):
         )
         return sorted(r[0] - 100 for r in rows)
 
+    # A delete-free version is one parquet scan of its dirs, read from
+    # the files; a version with a deletion vector or an equality delete
+    # joins them away, so its state is collected from a Spark job.
+    sigs = dd.ingest_signatures(batch)
+    jobs = [
+        _jobs(spark, lambda: dd.ingest_dedup_against(t.read(spark, version=v), sigs))[1]
+        for v in (v1, v2, v3, v4, v5)
+    ]
+    assert [n == 0 for n in jobs] == [True, True, False, False, False], jobs
     assert found(lambda: t.read(spark, version=v1)) == [1, 3]
     assert found(lambda: t.read(spark, version=v2)) == [1, 3, 12, 13]
     assert found(lambda: t.read(spark, version=v3)) == [1, 12, 13]

@@ -2570,6 +2570,29 @@ def test_temporal_string_values_prune_only_in_iso_form(spark, tmp_path):
         assert _dirs(t, where)[0] == [], where
 
 
+def test_in_list_coerces_every_value_as_equality(spark, tmp_path):
+    """An IN list of one value and of several match the same rows: each
+    value is compared as ``col == value`` compares it, so a non-ISO date
+    string is cast to the column's date whatever the list's length."""
+    from functools import reduce
+    from operator import or_
+
+    from pyspark.sql import functions as F
+
+    t = TransactionalTable(str(tmp_path / "t"))
+    df = spark.range(31).select(
+        "id",
+        F.date_add(F.lit("2024-01-01").cast("date"), F.col("id").cast("int"))
+        .alias("d"),
+    )
+    t.commit(df, stats_cols=["d"])
+    full = t.read(spark)
+    for values in (["2024-1-5"], ["2024-1-5", "2024-1-6"], ["2024-01-05", "2024-1-6"]):
+        want = _ids(full.filter(reduce(or_, (F.col("d") == v for v in values))))
+        assert want == [4, 5][: len(values)], values
+        assert _ids(t.scan(spark, t.plan({"d": values}))) == want, values
+
+
 def test_delete_where_part_drops_interior_rewrites_boundary(spark, tmp_path):
     import datetime as dt
 

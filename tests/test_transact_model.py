@@ -302,6 +302,37 @@ class TableMachine(RuleBasedStateMachine):
         v = self.t.rewrite_partitioned(_SPARK, stats_cols=["id"])
         self._record(v, state)
 
+    @rule(
+        spec=st.sampled_from(["bucket[4]", "truncate[3]"]),
+        n=st.integers(2, 6),
+        frac=st.tuples(st.floats(0, 1), st.floats(0, 1)),
+        keys=st.lists(st.floats(0, 1), min_size=1, max_size=3),
+        point=st.booleans(),
+    )
+    def dv_delete_then_plan_on_layout(self, spec, n, frac, keys, point):
+        """A DV delete on a ``bucket`` or ``truncate`` layout (committed
+        first when the head has another layout or no rows), then a plan
+        on the new version at once: an IN of present or deleted keys, or
+        a range from the deleted range's low end. The delete carries
+        dirs, stats and layout verbatim, so the plan keeps the dirs it
+        kept before the delete, and its scan returns the model's rows."""
+        canon = TransactionalTable._parse_transform(spec)[2]
+        if self._cur_spec() != {"col": "id", "transform": canon} or not self._cur():
+            rows = self._fresh_rows(n)
+            v = self.t.commit_partitioned(
+                _SPARK, _df(rows), "id", transform=spec, stats_cols=["id"]
+            )
+            self._record(v, dict(rows))
+        before, state = self.t.current_version(), self._cur()
+        ids = sorted(state)
+        lo, hi = sorted(ids[int(f * (len(ids) - 1))] for f in frac)
+        v = self.t.delete_where_dv(_SPARK, "id", lo=lo, hi=hi)
+        self._record(v, {k: p for k, p in state.items() if not lo <= k <= hi})
+        probe = [ids[int(f * (len(ids) - 1))] for f in keys]
+        where = {"id": probe if point else (lo, None)}
+        assert self.t.plan(where, v).kept == self.t.plan(where, before).kept, where
+        assert self._plan_scan_matches_model(1.0, where) == v
+
     def _plan_scan_matches_model(self, pick, where) -> int:
         """``scan(plan(where))`` on a random live version, partitioned
         or not and under any deletes, returns exactly the model's rows
