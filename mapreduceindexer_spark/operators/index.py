@@ -109,49 +109,27 @@ def build_postings(
 
 def merge_postings(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Incremental index maintenance: merge a delta postings relation into a
-    base one — union + per-term array merge, ONE shuffle on term.
+    base one — a full-outer join on term, each side's array passed through
+    where the other has no row, merged where both do.
 
     ``merge(build(A), build(B)) ≡ build(A ∪ B)`` for disjoint doc sets
     (posting sets union; df re-derives from the merged array), which is the
     whole contract of incremental indexing: ingest new documents by
     building postings over the delta only, then merge — never re-scan the
     base corpus. Pinned by ``q_postings_merge``'s oracle, which is the
-    full-rebuild SQL.
+    full-rebuild SQL. Each side holds one row per term (unsegmented
+    postings).
 
-    At 100 TB the merge is a co-located join if both sides are bucketed by
-    term (see tests/test_bucketing.py) — zero shuffle instead of one.
-    """
-    unioned = base.select("term", "doc_ids").unionByName(
-        delta.select("term", "doc_ids")
-    )
-    merged = unioned.groupBy("term").agg(
-        F.sort_array(F.array_distinct(F.flatten(F.collect_list("doc_ids")))).alias(
-            "doc_ids"
-        )
-    )
-    return merged.select(
-        "term",
-        F.substring("term", 1, 1).alias("letter"),
-        "doc_ids",
-        F.size("doc_ids").cast("bigint").alias("df"),
-    )
-
-
-def merge_postings_colocated(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """``merge_postings`` re-expressed as a full-outer join on term, for
-    the case where the inputs are bucketed-by-term tables.
-
-    The union+groupBy formulation above always shuffles the unioned
-    relation; a join lets Spark use each side's bucketing, so when both
-    sides are bucketed by ``term`` the merge plan has ZERO exchanges
-    (pinned by tests/test_streaming.py for the streaming state path and
-    tests/test_bucketing.py for batch). This is the 100 TB shape: the
-    big maintained index is never re-shuffled to absorb a delta.
+    A join lets Spark use each side's bucketing, so when both sides are
+    bucketed by ``term`` the merge plan has ZERO exchanges (pinned by
+    tests/test_streaming.py for the streaming state path and
+    tests/test_bucketing.py for batch). This is the 100 TB shape: the big
+    maintained index is never re-shuffled to absorb a delta.
 
     The ``merge`` hint pins sort-merge: at test scale AQE would broadcast
     the tiny side (a broadcast EXCHANGE, and broadcast also ignores
     bucketing); production-size state plans SMJ on its own and the hint
-    is a no-op. Output is identical to ``merge_postings``.
+    is a no-op.
     """
     b = base.select("term", F.col("doc_ids").alias("_ids_a"))
     d = delta.select("term", F.col("doc_ids").alias("_ids_b"))
@@ -189,7 +167,7 @@ def delete_from_postings(base: DataFrame, deleted_postings: DataFrame) -> DataFr
     from the index entirely. Cost is O(|index| passthrough + |terms in
     deleted docs| array work) with ONE shuffle on term — and zero
     exchanges when the maintained index and the delta are both
-    bucketed by term, same as ``merge_postings_colocated`` (the
+    bucketed by term, same as ``merge_postings`` (the
     ``merge`` hint pins SMJ for the same reason documented there).
 
     Reference parity: the reference (src/functions.cpp:146-162) only

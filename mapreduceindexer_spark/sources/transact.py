@@ -368,48 +368,82 @@ def _constraint_error(bad: dict, constraints: dict, what: str) -> ValueError:
     )
 
 
-def _carried_layout(manifest: dict) -> tuple[dict, dict]:
-    """(meta entries, top-level entries) of ``manifest``'s partition
-    layout, for a commit that carries its dirs VERBATIM (a DV or
-    equality delete, a restore). The transform and the per-dir spec
-    index must travel with the dirs they describe: a bare
-    ``partitioned_by`` would read as identity keys and make layout
-    pruning skip live rows of a bucket or truncate layout."""
-    meta = {
-        k: manifest["meta"][k]
-        for k in ("partitioned_by", "partition_transform")
-        if manifest.get("meta", {}).get(k)
-    }
-    top = {}
-    if manifest.get("specs"):
-        top = {"specs": manifest["specs"], "dir_spec": manifest["dir_spec"]}
-    return meta, top
+def _successor(
+    prev: dict | None,
+    version: int,
+    mode: str,
+    kept,
+    added: dict | None = None,
+    meta: dict | None = None,
+    *,
+    schema: dict | None = None,
+    props: dict | None = None,
+    dv: tuple[str, list] | None = None,
+    eq: tuple[str, list] | None = None,
+    layout: dict | None = None,
+) -> dict:
+    """The manifest of ``version``, the successor of ``prev``: every
+    commit that changes the dir set builds it here, so what version N+1
+    keeps from version N is decided once. The caller names the dirs it
+    ``kept`` from ``prev`` and the dirs it ``added`` (dir -> stats
+    entry, falsy for none); ``dv``/``eq`` are ``(file name, dirs)`` of a
+    new deletion vector or equality-delete file. The rest follows
+    ``prev``:
 
-
-def _carry_dv(manifest: dict, dirs) -> dict:
-    """The previous manifest's deletion-vector map restricted to the
-    dirs the next version keeps UNREWRITTEN — a rewritten dir's rows
-    were re-materialized through a DV-applying read, so its vectors
-    must NOT follow it (they address positions in the old files)."""
-    keep = set(dirs)
-    return {
-        d: list(names)
-        for d, names in manifest.get("dv", {}).items()
-        if d in keep
-    }
-
-
-def _carry_eq(manifest: dict, dirs) -> dict:
-    """``_carry_dv`` for EQUALITY-delete files: the previous manifest's
-    eq map restricted to dirs kept UNREWRITTEN (a rewritten dir was
-    re-materialized through an eq-applying read, so carrying its eq
-    files would double-apply — and worse, kill re-inserted keys)."""
-    keep = set(dirs)
-    return {
-        d: list(names)
-        for d, names in manifest.get("eq", {}).items()
-        if d in keep
-    }
+    - the recorded schema, unless ``schema`` evolved it;
+    - the table properties (``props`` overrides: a restore keeps the
+      head's, not the target's);
+    - the stats entries of the kept dirs;
+    - the ``dv``/``eq`` lists of the kept dirs only: a rewritten dir was
+      read through its deletes, so its files must not follow it (they
+      address positions or keys of the old files, and would kill
+      re-inserted keys);
+    - the partition layout (``partitioned_by``/``partition_transform``
+      in meta, ``specs``/``dir_spec``) exactly when nothing is added —
+      the transform must travel with the dirs it describes, or layout
+      pruning reads a bucket layout as identity keys and skips live
+      rows. The partitioned commits pass their own ``layout``."""
+    prev = prev or {}
+    added = added or {}
+    out = {"version": version, "mode": mode, "dirs": [*kept, *added]}
+    if schema is None:
+        schema = prev.get("schema")
+    if schema is not None:
+        out["schema"] = schema
+    out.update(_carried_props(prev) if props is None else props)
+    old = prev.get("stats", {})
+    stats = {d: old[d] for d in kept if d in old}
+    stats.update((d, e) for d, e in added.items() if e)
+    if stats:
+        out["stats"] = stats
+    for k, new in (("dv", dv), ("eq", eq)):
+        have = prev.get(k, {})
+        files = {d: list(have[d]) for d in kept if d in have}
+        if new:
+            for d in new[1]:
+                files.setdefault(d, []).append(new[0])
+        if files:
+            out[k] = files
+    if layout is None and not added:
+        pm = prev.get("meta", {})
+        layout = {
+            k: pm[k]
+            for k in ("partitioned_by", "partition_transform")
+            if pm.get(k)
+        }
+        if prev.get("specs"):
+            ds = prev["dir_spec"]
+            layout["specs"] = prev["specs"]
+            layout["dir_spec"] = {d: ds[d] for d in kept if d in ds}
+    meta = dict(meta or {})
+    for k, v in (layout or {}).items():
+        if k in ("specs", "dir_spec"):
+            out[k] = v
+        else:
+            meta[k] = v
+    if meta:
+        out["meta"] = meta
+    return out
 
 
 def _footer_subdir_stats(snap: str, part_name: str, cols: list) -> dict | None:
@@ -974,6 +1008,27 @@ class TransactionalTable:
         ) as fh:
             return json.load(fh)
 
+    def _head(self, expected_version: int | None) -> tuple[int, dict | None]:
+        """(base version, its manifest) for a write: ``expected_version``
+        or the current head, with None for an empty table. A stale
+        ``expected_version`` whose manifest retention retired is a
+        concurrency loss, not an IO bug: it raises the
+        ``CommitConflict`` callers catch."""
+        base = (
+            expected_version
+            if expected_version is not None
+            else self.current_version()
+        )
+        if base < 1:
+            return base, None
+        try:
+            return base, self._manifest(base)
+        except FileNotFoundError:
+            raise CommitConflict(
+                f"version {base} was retired by retention since it was "
+                "read; re-read the table and retry"
+            ) from None
+
     # -- writes -------------------------------------------------------------
 
     def commit(
@@ -1027,27 +1082,12 @@ class TransactionalTable:
         """
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-        base = (
-            expected_version
-            if expected_version is not None
-            else self.current_version()
-        )
-        new_version = base + 1
         # Schema evolution resolves BEFORE the snapshot write so an
         # illegal type change fails fast with no orphan dir: appends
         # evolve add-only against the recorded schema; overwrite is a
         # fresh table state and records the new schema as-is.
-        try:
-            cur_m = self._manifest(base) if base > 0 else None
-        except FileNotFoundError:
-            # A stale expected_version whose manifest retention retired
-            # is a concurrency loss, not an IO bug — keep the
-            # optimistic-concurrency contract callers catch (review
-            # finding).
-            raise CommitConflict(
-                f"version {base} was retired by retention since it was "
-                "read; re-read the table and retry"
-            ) from None
+        base, cur_m = self._head(expected_version)
+        new_version = base + 1
         prev = cur_m if mode == "append" else None
         schema_json = _evolve_schema(
             prev.get("schema") if prev else None, df.schema
@@ -1106,7 +1146,6 @@ class TransactionalTable:
         # table root — without the root fsync a power loss could keep
         # the manifest (synced below) while dropping the directory it
         # references.
-        stats: dict[str, dict] = {}
         entry = _write_snap_with_stats(
             df,
             snap,
@@ -1116,40 +1155,19 @@ class TransactionalTable:
             constraints=folded_constraints,
             what=f"commit to v{new_version}",
         )
-        if entry:
-            stats[os.path.basename(snap)] = entry
-
-        dv = {}
-        eq = {}
-        if prev is not None:
-            dirs = prev["dirs"] + [os.path.basename(snap)]
-            # Inherited dirs keep whatever stats their own commit
-            # recorded — appends extend the stats map, never recompute;
-            # their deletion vectors ride along unchanged (the new
-            # snapshot has none by construction).
-            stats = {**prev.get("stats", {}), **stats}
-            dv = _carry_dv(prev, prev["dirs"])
-            eq = _carry_eq(prev, prev["dirs"])
-        else:
-            dirs = [os.path.basename(snap)]
-
-        payload = {
-            "version": new_version,
-            "mode": mode,
-            "dirs": dirs,
-            "schema": schema_json,
-            **props,
-        }
-        if stats:
-            payload["stats"] = stats
-        if dv:
-            payload["dv"] = dv
-        if eq:
-            payload["eq"] = eq
         if unique_probe_dirs is not None:
             meta = {**(meta or {}), "unique_probe_dirs": unique_probe_dirs}
-        if meta:
-            payload["meta"] = meta
+        # An append keeps every inherited dir with the stats and deletes
+        # its own commit recorded; an overwrite keeps none.
+        payload = _successor(
+            cur_m,
+            new_version,
+            mode,
+            prev["dirs"] if prev is not None else [],
+            {os.path.basename(snap): entry},
+            meta,
+            schema=schema_json,
+        )
         return self._publish_manifest(payload, new_version, [snap])
 
     def _publish_manifest(
@@ -1807,11 +1825,8 @@ class TransactionalTable:
             raise ValueError("delete_where needs at least one bound")
         manifest = self._manifest(cur)
         may_match, preserved = self._prune(manifest, {col: (lo, hi)})
-        old_stats = manifest.get("stats", {})
         new_version = cur + 1
-
-        dirs = [d for d in manifest["dirs"] if d in set(preserved)]
-        stats = {d: old_stats[d] for d in dirs if d in old_stats}
+        added: dict[str, dict] = {}
         cleanup: list[str] = []
         if may_match:
             matched = F.lit(True)
@@ -1823,40 +1838,22 @@ class TransactionalTable:
                 spark, manifest, may_match
             ).filter(F.col(col).isNull() | ~matched)
             snap = os.path.join(self.path, f"snap-{uuid.uuid4().hex[:12]}")
-            entry = _write_snap_with_stats(
+            added[os.path.basename(snap)] = _write_snap_with_stats(
                 survivors, snap, self.path, stats_cols, bloom_cols
             )
             cleanup.append(snap)
-            dirs = dirs + [os.path.basename(snap)]
-            if entry:
-                stats[os.path.basename(snap)] = entry
-        payload = {
-            "version": new_version,
-            "mode": "delete",
-            **(
-                {"schema": manifest["schema"]}
-                if "schema" in manifest
-                else {}
-            ),
-            **_carried_props(manifest),
-            "dirs": dirs,
-            "meta": {
+        payload = _successor(
+            manifest,
+            new_version,
+            "delete",
+            [d for d in manifest["dirs"] if d in set(preserved)],
+            added,
+            {
                 "deleted_from": cur,
                 "rewrote_dirs": len(may_match),
                 "preserved_dirs": len(preserved),
             },
-        }
-        if stats:
-            payload["stats"] = stats
-        # Preserved dirs keep their deletion vectors; rewritten dirs
-        # were read THROUGH theirs (so the rewrite already excluded
-        # those rows) and must drop them.
-        dv = _carry_dv(manifest, preserved)
-        if dv:
-            payload["dv"] = dv
-        eq = _carry_eq(manifest, preserved)
-        if eq:
-            payload["eq"] = eq
+        )
         return self._publish_manifest(payload, new_version, cleanup)
 
     def delete_where_dv(
@@ -1911,86 +1908,90 @@ class TransactionalTable:
                 )
         may_match, preserved = self._prune(manifest, {col: (lo, hi)})
         new_version = cur + 1
-        dv_map = _carry_dv(manifest, manifest["dirs"])
-        eq_map = _carry_eq(manifest, manifest["dirs"])
         cleanup: list[str] = []
         dv_rows = 0
+        new_dv = None
         if may_match:
-            # A DV-applying _read_dirs read loses _metadata resolution
-            # past its anti-join, so tag positions on a fresh scan and
-            # exclude PRIOR vectors explicitly — the new vector must
-            # never duplicate an already-deleted position (dv_rows is
-            # the exact newly-deleted count).
-            paths = [os.path.join(self.path, d) for d in may_match]
-            if sj is not None:
-                from pyspark.sql.types import StructType
-
-                raw = spark.read.schema(StructType.fromJson(sj)).parquet(*paths)
-            else:
-                raw = spark.read.parquet(*paths)
             matched = F.col(col).isNotNull()
             if lo is not None:
                 matched = matched & (F.col(col) >= F.lit(lo))
             if hi is not None:
                 matched = matched & (F.col(col) <= F.lit(hi))
-            doomed = raw.where(matched).select(
-                F.regexp_extract(
-                    F.col("_metadata.file_path"), _DV_RELPATH_RE, 1
-                ).alias("_dv_rel_path"),
-                F.col("_metadata.row_index").alias("_dv_pos"),
+            dvdir, dv_rows = self._write_vector(
+                spark, manifest, may_match, lambda raw: raw.where(matched)
             )
-            prior = sorted({n for d in may_match for n in dv_map.get(d, [])})
-            if prior:
-                doomed = doomed.join(
-                    self._read_dv(spark, prior),
-                    ["_dv_rel_path", "_dv_pos"],
-                    "left_anti",
-                )
-            dvdir = os.path.join(self.path, f"dv-{uuid.uuid4().hex[:12]}")
-            # One file per vector: DV deletes are the SMALL-delete path
-            # (a trickle of erasures against big snapshots); a delete
-            # large enough to make one writer the bottleneck should be
-            # copy-on-write (delete_where), which also spares readers
-            # the proportionally large anti-join.
-            doomed.coalesce(1).write.mode("error").parquet(dvdir)
-            fsync_tree(dvdir)
-            fsync_path(self.path)
-            dv_rows = spark.read.schema(_dv_schema()).parquet(dvdir).count()
-            if dv_rows == 0:
-                # Stats kept the dir but no live row matched: don't
-                # register (or retain) an empty vector.
-                shutil.rmtree(dvdir, ignore_errors=True)
-            else:
+            if dvdir is not None:
                 cleanup.append(dvdir)
-                name = os.path.basename(dvdir)
-                for d in may_match:
-                    dv_map.setdefault(d, []).append(name)
-        layout_meta, layout = _carried_layout(manifest)
-        payload = {
-            "version": new_version,
-            "mode": "delete_dv",
-            **({"schema": sj} if sj is not None else {}),
-            **_carried_props(manifest),
-            "dirs": list(manifest["dirs"]),
-            **layout,
-            "meta": {
-                # A DV delete never disturbs the partitioned layout, so
-                # replace_partitions and layout pruning keep working
-                # across it.
-                **layout_meta,
+                new_dv = (os.path.basename(dvdir), may_match)
+        payload = _successor(
+            manifest,
+            new_version,
+            "delete_dv",
+            manifest["dirs"],
+            meta={
                 "deleted_from": cur,
                 "dv_rows": dv_rows,
                 "dv_target_dirs": len(may_match),
                 "preserved_dirs": len(preserved),
             },
-        }
-        if manifest.get("stats"):
-            payload["stats"] = manifest["stats"]
-        if dv_map:
-            payload["dv"] = dv_map
-        if eq_map:
-            payload["eq"] = eq_map
+            dv=new_dv,
+        )
         return self._publish_manifest(payload, new_version, cleanup)
+
+    def _write_vector(
+        self, spark: SparkSession, manifest: dict, dirs, doomed
+    ) -> tuple[str | None, int]:
+        """Write one position deletion vector over ``dirs``: ``doomed``
+        picks the rows to delete from a raw scan of the dirs tagged with
+        each row's ``_dv_rel_path``/``_dv_pos``. The scan is fresh
+        because a DV-applying ``_read_dirs`` read loses ``_metadata``
+        resolution past its anti-join; positions a PRIOR vector of the
+        dirs already deleted are excluded, so the returned row count is
+        the exact newly deleted one. Returns (vector dir, rows), or
+        (None, 0) when no live row matched: an empty vector is neither
+        registered nor kept."""
+        from pyspark.sql import functions as F
+
+        paths = [os.path.join(self.path, d) for d in dirs]
+        sj = manifest.get("schema")
+        if sj is not None:
+            from pyspark.sql.types import StructType
+
+            raw = spark.read.schema(StructType.fromJson(sj)).parquet(*paths)
+        else:
+            raw = spark.read.parquet(*paths)
+        # Tag positions on the scan itself: _metadata resolves only
+        # there, and a join projects it away.
+        tagged = raw.select(
+            "*",
+            F.regexp_extract(
+                F.col("_metadata.file_path"), _DV_RELPATH_RE, 1
+            ).alias("_dv_rel_path"),
+            F.col("_metadata.row_index").alias("_dv_pos"),
+        )
+        pos = doomed(tagged).select("_dv_rel_path", "_dv_pos")
+        have = manifest.get("dv", {})
+        prior = sorted({n for d in dirs for n in have.get(d, [])})
+        if prior:
+            pos = pos.join(
+                self._read_dv(spark, prior),
+                ["_dv_rel_path", "_dv_pos"],
+                "left_anti",
+            )
+        dvdir = os.path.join(self.path, f"dv-{uuid.uuid4().hex[:12]}")
+        # One file per vector: DV deletes and MOR merges are the SMALL
+        # path (a trickle of erasures or upserts against big snapshots);
+        # a batch large enough to make one writer the bottleneck should
+        # be copy-on-write (delete_where, merge_rows, apply_cdc), which
+        # also spares readers the proportionally large anti-join.
+        pos.coalesce(1).write.mode("error").parquet(dvdir)
+        fsync_tree(dvdir)
+        fsync_path(self.path)
+        rows = spark.read.schema(_dv_schema()).parquet(dvdir).count()
+        if rows == 0:
+            shutil.rmtree(dvdir, ignore_errors=True)
+            return None, 0
+        return dvdir, rows
 
     def merge_rows(
         self,
@@ -2073,10 +2074,8 @@ class TransactionalTable:
             preserved = list(manifest["dirs"])
         else:
             may_match, preserved = self._prune(manifest, {key: (lo, hi)})
-        old_stats = manifest.get("stats", {})
         new_version = cur + 1
-        dirs = [d for d in manifest["dirs"] if d in set(preserved)]
-        stats = {d: old_stats[d] for d in dirs if d in old_stats}
+        added: dict[str, dict] = {}
         cleanup: list[str] = []
         if lo is not None:
             new_rows = updates
@@ -2089,39 +2088,22 @@ class TransactionalTable:
                     updates.select(*survivors.columns)
                 )
             snap = os.path.join(self.path, f"snap-{uuid.uuid4().hex[:12]}")
-            entry = _write_snap_with_stats(
+            added[os.path.basename(snap)] = _write_snap_with_stats(
                 new_rows, snap, self.path, stats_cols, bloom_cols
             )
             cleanup.append(snap)
-            dirs = dirs + [os.path.basename(snap)]
-            if entry:
-                stats[os.path.basename(snap)] = entry
-        payload = {
-            "version": new_version,
-            "mode": "merge",
-            **(
-                {"schema": manifest["schema"]}
-                if "schema" in manifest
-                else {}
-            ),
-            **_carried_props(manifest),
-            "dirs": dirs,
-            "meta": {
+        payload = _successor(
+            manifest,
+            new_version,
+            "merge",
+            [d for d in manifest["dirs"] if d in set(preserved)],
+            added,
+            {
                 "merged_from": cur,
                 "rewrote_dirs": len(may_match),
                 "preserved_dirs": len(preserved),
             },
-        }
-        if stats:
-            payload["stats"] = stats
-        # Same DV discipline as delete_where: preserved dirs keep
-        # their vectors, rewritten dirs drop them (already applied).
-        dv = _carry_dv(manifest, preserved)
-        if dv:
-            payload["dv"] = dv
-        eq = _carry_eq(manifest, preserved)
-        if eq:
-            payload["eq"] = eq
+        )
         return self._publish_manifest(payload, new_version, cleanup)
 
     def merge_rows_mor(
@@ -2303,11 +2285,9 @@ class TransactionalTable:
         else:
             may_match, preserved = self._prune(manifest, {key: (lo, hi)})
         new_version = cur + 1
-        dv_map = _carry_dv(manifest, manifest["dirs"])
-        eq_map = _carry_eq(manifest, manifest["dirs"])
+        added: dict[str, dict] = {}
+        new_eq = None
         cleanup: list[str] = []
-        dirs = list(manifest["dirs"])
-        stats = dict(manifest.get("stats", {}))
         if lo is not None:
             if may_match:
                 eqdir = os.path.join(
@@ -2324,36 +2304,26 @@ class TransactionalTable:
                 fsync_tree(eqdir)
                 fsync_path(self.path)
                 cleanup.append(eqdir)
-                name = os.path.basename(eqdir)
-                for d in may_match:
-                    eq_map.setdefault(d, []).append(name)
+                new_eq = (os.path.basename(eqdir), may_match)
             snap = os.path.join(self.path, f"snap-{uuid.uuid4().hex[:12]}")
-            entry = _write_snap_with_stats(
+            added[os.path.basename(snap)] = _write_snap_with_stats(
                 inserts, snap, self.path, stats_cols, bloom_cols
             )
             cleanup.append(snap)
-            dirs.append(os.path.basename(snap))
-            if entry:
-                stats[os.path.basename(snap)] = entry
-        payload = {
-            "version": new_version,
-            "mode": "merge_eq",
-            **({"schema": sj} if sj is not None else {}),
-            **_carried_props(manifest),
-            "dirs": dirs,
-            "meta": {
+        payload = _successor(
+            manifest,
+            new_version,
+            "merge_eq",
+            manifest["dirs"],
+            added,
+            {
                 "merged_from": cur,
                 "eq_keys": int(bounds["n_keys"] or 0),
                 "eq_target_dirs": len(may_match),
                 "preserved_dirs": len(preserved),
             },
-        }
-        if stats:
-            payload["stats"] = stats
-        if dv_map:
-            payload["dv"] = dv_map
-        if eq_map:
-            payload["eq"] = eq_map
+            eq=new_eq,
+        )
         return self._publish_manifest(payload, new_version, cleanup)
 
     def delete_eq(
@@ -2413,8 +2383,7 @@ class TransactionalTable:
         else:
             may_match, preserved = self._prune(manifest, {key: (lo, hi)})
         new_version = cur + 1
-        dv_map = _carry_dv(manifest, manifest["dirs"])
-        eq_map = _carry_eq(manifest, manifest["dirs"])
+        new_eq = None
         cleanup: list[str] = []
         if may_match:
             eqdir = os.path.join(self.path, f"eq-{uuid.uuid4().hex[:12]}")
@@ -2422,35 +2391,20 @@ class TransactionalTable:
             fsync_tree(eqdir)
             fsync_path(self.path)
             cleanup.append(eqdir)
-            name = os.path.basename(eqdir)
-            for d in may_match:
-                eq_map.setdefault(d, []).append(name)
-        layout_meta, layout = _carried_layout(manifest)
-        payload = {
-            "version": new_version,
-            "mode": "delete_eq",
-            **({"schema": sj} if sj is not None else {}),
-            **_carried_props(manifest),
-            "dirs": list(manifest["dirs"]),
-            **layout,
-            "meta": {
-                # An equality delete never disturbs the partitioned
-                # layout (dirs are carried verbatim), so the layout
-                # metadata must travel — dropping it would wedge every
-                # partition-aware op on the table.
-                **layout_meta,
+            new_eq = (os.path.basename(eqdir), may_match)
+        payload = _successor(
+            manifest,
+            new_version,
+            "delete_eq",
+            manifest["dirs"],
+            meta={
                 "deleted_from": cur,
                 "eq_keys": int(bounds["n_keys"] or 0),
                 "eq_target_dirs": len(may_match),
                 "preserved_dirs": len(preserved),
             },
-        }
-        if manifest.get("stats"):
-            payload["stats"] = dict(manifest["stats"])
-        if dv_map:
-            payload["dv"] = dv_map
-        if eq_map:
-            payload["eq"] = eq_map
+            eq=new_eq,
+        )
         return self._publish_manifest(payload, new_version, cleanup)
 
     def _mor_apply(
@@ -2478,8 +2432,6 @@ class TransactionalTable:
         bound ALL batch keys (kills and inserts) so the key-range
         prune covers tombstone matching too; ``batch_cols`` is the
         caller's raw column list for the loud missing-column check."""
-        from pyspark.sql import functions as F
-
         manifest = self._manifest(cur)
         sj = manifest.get("schema")
         if sj is not None:
@@ -2517,95 +2469,46 @@ class TransactionalTable:
         else:
             may_match, preserved = self._prune(manifest, {key: (lo, hi)})
         new_version = cur + 1
-        dv_map = _carry_dv(manifest, manifest["dirs"])
-        eq_map = _carry_eq(manifest, manifest["dirs"])
         cleanup: list[str] = []
         dv_rows = 0
+        new_dv = None
         if may_match:
-            # Tag doomed positions on a fresh raw scan (a DV-applying
-            # _read_dirs read loses _metadata resolution past its
-            # anti-join) and exclude PRIOR vectors explicitly — exactly
-            # the delete_where_dv discipline, with the match predicate
-            # being key membership in the batch instead of a range.
-            # The kill-keys side is the bounded validated batch, so
-            # AQE broadcast-picks it.
-            paths = [os.path.join(self.path, d) for d in may_match]
-            if sj is not None:
-                from pyspark.sql.types import StructType
-
-                raw = spark.read.schema(StructType.fromJson(sj)).parquet(
-                    *paths
-                )
-            else:
-                raw = spark.read.parquet(*paths)
-            # Tag positions BEFORE the join — _metadata resolves only
-            # on the scan, and a join projects it away.
-            tagged = raw.select(
-                F.col(key),
-                F.regexp_extract(
-                    F.col("_metadata.file_path"), _DV_RELPATH_RE, 1
-                ).alias("_dv_rel_path"),
-                F.col("_metadata.row_index").alias("_dv_pos"),
+            # The delete_where_dv discipline, with the match predicate
+            # being key membership in the batch instead of a range. The
+            # kill-keys side is the bounded validated batch, so AQE
+            # broadcast-picks it. When the range stats kept dirs but no
+            # live base row shares a key with the batch, this is a pure
+            # insert with no vector.
+            dvdir, dv_rows = self._write_vector(
+                spark,
+                manifest,
+                may_match,
+                lambda raw: raw.join(kill_keys, key, "semi"),
             )
-            doomed = tagged.join(kill_keys, key, "semi").select(
-                "_dv_rel_path", "_dv_pos"
-            )
-            prior = sorted({n for d in may_match for n in dv_map.get(d, [])})
-            if prior:
-                doomed = doomed.join(
-                    self._read_dv(spark, prior),
-                    ["_dv_rel_path", "_dv_pos"],
-                    "left_anti",
-                )
-            dvdir = os.path.join(self.path, f"dv-{uuid.uuid4().hex[:12]}")
-            # One file per vector, as in delete_where_dv: MOR is the
-            # SMALL-batch path; a batch touching a large fraction of
-            # the table should be copy-on-write (merge_rows /
-            # apply_cdc), which also spares readers the proportionally
-            # large anti-join.
-            doomed.coalesce(1).write.mode("error").parquet(dvdir)
-            fsync_tree(dvdir)
-            fsync_path(self.path)
-            dv_rows = spark.read.schema(_dv_schema()).parquet(dvdir).count()
-            if dv_rows == 0:
-                # Range stats kept the dirs but no live base row shares
-                # a key with the batch: pure insert, no vector.
-                shutil.rmtree(dvdir, ignore_errors=True)
-            else:
+            if dvdir is not None:
                 cleanup.append(dvdir)
-                name = os.path.basename(dvdir)
-                for d in may_match:
-                    dv_map.setdefault(d, []).append(name)
-        dirs = list(manifest["dirs"])
-        stats = dict(manifest.get("stats", {}))
+                new_dv = (os.path.basename(dvdir), may_match)
+        added: dict[str, dict] = {}
         if inserts is not None:
             snap = os.path.join(self.path, f"snap-{uuid.uuid4().hex[:12]}")
-            entry = _write_snap_with_stats(
+            added[os.path.basename(snap)] = _write_snap_with_stats(
                 inserts, snap, self.path, stats_cols, bloom_cols
             )
             cleanup.append(snap)
-            dirs.append(os.path.basename(snap))
-            if entry:
-                stats[os.path.basename(snap)] = entry
-        payload = {
-            "version": new_version,
-            "mode": mode,
-            **({"schema": sj} if sj is not None else {}),
-            **_carried_props(manifest),
-            "dirs": dirs,
-            "meta": {
+        payload = _successor(
+            manifest,
+            new_version,
+            mode,
+            manifest["dirs"],
+            added,
+            {
                 **meta,
                 "dv_rows": dv_rows,
                 "dv_target_dirs": len(may_match),
                 "preserved_dirs": len(preserved),
             },
-        }
-        if stats:
-            payload["stats"] = stats
-        if dv_map:
-            payload["dv"] = dv_map
-        if eq_map:
-            payload["eq"] = eq_map
+            dv=new_dv,
+        )
         return self._publish_manifest(payload, new_version, cleanup)
 
     def apply_cdc(
@@ -2695,10 +2598,8 @@ class TransactionalTable:
             preserved = list(manifest["dirs"])
         else:
             may_match, preserved = self._prune(manifest, {key: (lo, hi)})
-        old_stats = manifest.get("stats", {})
         new_version = cur + 1
-        dirs = [d for d in manifest["dirs"] if d in set(preserved)]
-        stats = {d: old_stats[d] for d in dirs if d in old_stats}
+        added: dict[str, dict] = {}
         cleanup: list[str] = []
         n_live = bounds["n"] - bounds["n_deleted"]
         if lo is not None:
@@ -2725,38 +2626,23 @@ class TransactionalTable:
                 new_rows = live
             if new_rows is not None:
                 snap = os.path.join(self.path, f"snap-{uuid.uuid4().hex[:12]}")
-                entry = _write_snap_with_stats(
+                added[os.path.basename(snap)] = _write_snap_with_stats(
                     new_rows, snap, self.path, stats_cols, bloom_cols
                 )
                 cleanup.append(snap)
-                dirs = dirs + [os.path.basename(snap)]
-                if entry:
-                    stats[os.path.basename(snap)] = entry
-        payload = {
-            "version": new_version,
-            "mode": "cdc",
-            **(
-                {"schema": manifest["schema"]}
-                if "schema" in manifest
-                else {}
-            ),
-            **_carried_props(manifest),
-            "dirs": dirs,
-            "meta": {
+        payload = _successor(
+            manifest,
+            new_version,
+            "cdc",
+            [d for d in manifest["dirs"] if d in set(preserved)],
+            added,
+            {
                 "cdc_from": cur,
                 "rewrote_dirs": len(may_match),
                 "preserved_dirs": len(preserved),
                 "n_changes": bounds["n"],
             },
-        }
-        if stats:
-            payload["stats"] = stats
-        dv = _carry_dv(manifest, preserved)
-        if dv:
-            payload["dv"] = dv
-        eq = _carry_eq(manifest, preserved)
-        if eq:
-            payload["eq"] = eq
+        )
         return self._publish_manifest(payload, new_version, cleanup)
 
     def apply_cdc_mor(
@@ -3005,22 +2891,18 @@ class TransactionalTable:
         stats = _grouped_subdir_stats(
             spark, snap, "_bucket", stats_cols, bloom_cols
         )
-        prev_m = self._manifest(cur)
-        prev_schema = prev_m.get("schema")
-        payload = {
-            "version": cur + 1,
-            "mode": "overwrite",
-            **({"schema": prev_schema} if prev_schema is not None else {}),
-            **_carried_props(prev_m),
-            "dirs": subdirs,
-            "meta": {
+        payload = _successor(
+            self._manifest(cur),
+            cur + 1,
+            "overwrite",
+            [],
+            {d: stats.get(d) for d in subdirs},
+            {
                 "clustered_from": cur,
                 "cluster_col": col,
                 "n_buckets": len(subdirs),
             },
-        }
-        if stats:
-            payload["stats"] = stats
+        )
         return self._publish_manifest(payload, cur + 1, [snap])
 
     def compact_zordered(
@@ -3147,22 +3029,18 @@ class TransactionalTable:
         stats = _grouped_subdir_stats(
             spark, snap, "_zbucket", all_stats, bloom_cols
         )
-        prev_m = self._manifest(cur)
-        prev_schema = prev_m.get("schema")
-        payload = {
-            "version": cur + 1,
-            "mode": "overwrite",
-            **({"schema": prev_schema} if prev_schema is not None else {}),
-            **_carried_props(prev_m),
-            "dirs": subdirs,
-            "meta": {
+        payload = _successor(
+            self._manifest(cur),
+            cur + 1,
+            "overwrite",
+            [],
+            {d: stats.get(d) for d in subdirs},
+            {
                 "zordered_from": cur,
                 "zorder_cols": [col_x, col_y],
                 "n_buckets": len(subdirs),
             },
-        }
-        if stats:
-            payload["stats"] = stats
+        )
         return self._publish_manifest(payload, cur + 1, [snap])
 
     # -- partition-level replace --------------------------------------------
@@ -3437,18 +3315,7 @@ class TransactionalTable:
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
         kind, param, canon = self._parse_transform(transform)
         spec = {"col": part_col, "transform": canon}
-        base_v = (
-            expected_version
-            if expected_version is not None
-            else self.current_version()
-        )
-        try:
-            cur_m = self._manifest(base_v) if base_v > 0 else None
-        except FileNotFoundError:
-            raise CommitConflict(
-                f"version {base_v} was retired by retention since it "
-                "was read; re-read the table and retry"
-            ) from None
+        base_v, cur_m = self._head(expected_version)
         prev_m = cur_m if mode == "append" else None
         schema_json = _evolve_schema(
             prev_m.get("schema") if prev_m else None, df.schema
@@ -3475,8 +3342,7 @@ class TransactionalTable:
         stats = _grouped_subdir_stats(
             spark, snap, self._PART, stats_cols, bloom_cols
         )
-        dv = {}
-        eq = {}
+        kept: list[str] = []
         if prev_m is not None:
             prev = prev_m
             prev_dir_specs = self._dir_specs(prev)
@@ -3501,36 +3367,27 @@ class TransactionalTable:
                     f"({prev_spec['col']!r}); pass evolve=True to start a "
                     "new partition spec (partition evolution)"
                 )
-            dirs = prev["dirs"] + subdirs
-            stats = {**prev.get("stats", {}), **stats}
-            dv = _carry_dv(prev, prev["dirs"])
-            eq = _carry_eq(prev, prev["dirs"])
+            kept = prev["dirs"]
             specs, dir_spec = self._extend_specs(
                 prev_dir_specs, spec, subdirs
             )
         else:
-            dirs = subdirs
             specs, dir_spec = [spec], {d: 0 for d in subdirs}
-        payload = {
-            "version": base_v + 1,
-            "mode": mode,
-            "schema": schema_json,
-            **props,
-            "dirs": dirs,
-            "specs": specs,
-            "dir_spec": dir_spec,
-            "meta": {
-                **(meta or {}),
+        payload = _successor(
+            cur_m,
+            base_v + 1,
+            mode,
+            kept,
+            {d: stats.get(d) for d in subdirs},
+            meta,
+            schema=schema_json,
+            layout={
                 "partitioned_by": part_col,
                 "partition_transform": canon,
+                "specs": specs,
+                "dir_spec": dir_spec,
             },
-        }
-        if stats:
-            payload["stats"] = stats
-        if dv:
-            payload["dv"] = dv
-        if eq:
-            payload["eq"] = eq
+        )
         return self._publish_manifest(payload, base_v + 1, [snap])
 
     @staticmethod
@@ -3582,17 +3439,12 @@ class TransactionalTable:
         via ``expected_version`` as everywhere."""
         from pyspark.sql import functions as F
 
-        cur = (
-            expected_version
-            if expected_version is not None
-            else self.current_version()
-        )
-        if cur < 1:
+        cur, manifest = self._head(expected_version)
+        if manifest is None:
             raise ValueError(
                 "replace_partitions needs a committed partitioned table; "
                 "use commit_partitioned first"
             )
-        manifest = self._manifest(cur)
         part_col = manifest.get("meta", {}).get("partitioned_by")
         if part_col is None:
             raise ValueError(
@@ -3677,39 +3529,31 @@ class TransactionalTable:
             )
 
         kept = [d for d in manifest["dirs"] if suffix_of(d) not in suffixes]
-        old_stats = manifest.get("stats", {})
-        stats = {d: old_stats[d] for d in kept if d in old_stats}
-        stats.update(new_stats)
         spec = {"col": part_col, "transform": canon}
         specs, dir_spec = self._extend_specs(
             {d: dir_specs.get(d, spec) for d in kept}, spec, subdirs
         )
-        payload = {
-            "version": cur + 1,
-            "mode": "replace_partitions",
-            "schema": schema_json,
-            **_carried_props(manifest),
-            "dirs": kept + subdirs,
-            "specs": specs,
-            "dir_spec": dir_spec,
-            "meta": {
+        # Untouched partitions keep their stats and deletes; replaced
+        # partitions' deletes die with the dirs they addressed.
+        payload = _successor(
+            manifest,
+            cur + 1,
+            "replace_partitions",
+            kept,
+            {d: new_stats.get(d) for d in subdirs},
+            {
                 **(meta or {}),
-                "partitioned_by": part_col,
-                "partition_transform": canon,
                 "replaced_partitions": sorted(suffixes),
                 "preserved_dirs": len(kept),
             },
-        }
-        if stats:
-            payload["stats"] = stats
-        # Untouched partitions keep their deletion vectors; replaced
-        # partitions' vectors die with the dirs they addressed.
-        dv = _carry_dv(manifest, kept)
-        if dv:
-            payload["dv"] = dv
-        eq = _carry_eq(manifest, kept)
-        if eq:
-            payload["eq"] = eq
+            schema=schema_json,
+            layout={
+                "partitioned_by": part_col,
+                "partition_transform": canon,
+                "specs": specs,
+                "dir_spec": dir_spec,
+            },
+        )
         return self._publish_manifest(payload, cur + 1, snap_cleanup)
 
     def pruned_dirs_part_eq(
@@ -3858,14 +3702,9 @@ class TransactionalTable:
 
         if lo is None and hi is None:
             raise ValueError("delete_where_part needs at least one bound")
-        cur = (
-            expected_version
-            if expected_version is not None
-            else self.current_version()
-        )
-        if cur < 1:
+        cur, manifest = self._head(expected_version)
+        if manifest is None:
             raise ValueError("delete_where_part needs a committed table")
-        manifest = self._manifest(cur)
         dir_specs = self._dir_specs(manifest)
         if dir_specs is None:
             raise ValueError(
@@ -3965,14 +3804,9 @@ class TransactionalTable:
         costs one full read + partitioned write; the evolution itself
         (``commit_partitioned(evolve=True)``) stays metadata-only.
         Optimistic concurrency via ``expected_version``."""
-        cur = (
-            expected_version
-            if expected_version is not None
-            else self.current_version()
-        )
-        if cur < 1:
+        cur, manifest = self._head(expected_version)
+        if manifest is None:
             raise ValueError("rewrite_partitioned needs a committed table")
-        manifest = self._manifest(cur)
         meta = manifest.get("meta", {})
         if part_col is None:
             part_col = meta.get("partitioned_by")
@@ -4596,31 +4430,21 @@ class TransactionalTable:
             )
         tm = self._manifest(self._resolve(version))
         cm = self._manifest(cur)
-        # Meta is NOT carried from either side: the head's meta can
-        # hold a streaming sink's batch_id (carrying it would make a
-        # retried microbatch after the restore no-op as "already
-        # committed"), and the target's meta described a different
-        # commit. The exceptions are the restore's own provenance and
-        # the target's partition layout marker, which describes the
-        # restored DIRS (commit_partitioned/replace_partitions key on
-        # it).
-        layout_meta, layout = _carried_layout(tm)
-        payload = {
-            "version": cur + 1,
-            "mode": "restore",
-            "dirs": list(tm["dirs"]),
-            **_carried_props(cm),
-            **layout,
-            "meta": {"restored_from": version, **layout_meta},
-        }
-        if tm.get("schema") is not None:
-            payload["schema"] = tm["schema"]
-        if tm.get("stats"):
-            payload["stats"] = tm["stats"]
-        if tm.get("dv"):
-            payload["dv"] = tm["dv"]
-        if tm.get("eq"):
-            payload["eq"] = tm["eq"]
+        # The target is the predecessor: its dirs, schema, stats,
+        # deletes and partition layout (which describes the restored
+        # DIRS) carry. Meta is NOT carried from either side beyond
+        # that: the head's meta can hold a streaming sink's batch_id
+        # (carrying it would make a retried microbatch after the
+        # restore no-op as "already committed"), and the target's meta
+        # described a different commit.
+        payload = _successor(
+            tm,
+            cur + 1,
+            "restore",
+            tm["dirs"],
+            meta={"restored_from": version},
+            props=_carried_props(cm),
+        )
         return self._publish_manifest(payload, cur + 1, [])
 
     # -- branches & tags (write-audit-publish) --------------------------------
@@ -4781,27 +4605,25 @@ class TransactionalTable:
         def _abs(d: str) -> str:
             return d if os.path.isabs(d) else os.path.join(self.path, d)
 
-        payload = {
-            "version": 1,
-            "mode": "overwrite",
-            "dirs": [_abs(d) for d in m["dirs"]],
-            **_carried_props(m),
-            "meta": {"cloned_from": self.path, "clone_source_version": v},
+        rekeyed = {
+            **m,
+            "stats": {_abs(d): s for d, s in m.get("stats", {}).items()},
+            "dv": {
+                _abs(d): [_abs(n) for n in names]
+                for d, names in m.get("dv", {}).items()
+            },
+            "eq": {
+                _abs(d): [_abs(n) for n in names]
+                for d, names in m.get("eq", {}).items()
+            },
         }
-        if m.get("schema") is not None:
-            payload["schema"] = m["schema"]
-        if m.get("stats"):
-            payload["stats"] = {_abs(k): s for k, s in m["stats"].items()}
-        if m.get("dv"):
-            payload["dv"] = {
-                _abs(d): [_abs(n) for n in names]
-                for d, names in m["dv"].items()
-            }
-        if m.get("eq"):
-            payload["eq"] = {
-                _abs(d): [_abs(n) for n in names]
-                for d, names in m["eq"].items()
-            }
+        payload = _successor(
+            rekeyed,
+            1,
+            "overwrite",
+            [_abs(d) for d in m["dirs"]],
+            meta={"cloned_from": self.path, "clone_source_version": v},
+        )
         os.makedirs(dest.path, exist_ok=True)
         dest._publish_manifest(payload, 1, [])
         return dest

@@ -32,7 +32,7 @@ Design:
   (Delta/Iceberg at production scale — identical query, transactional
   state).
 - Each delta is also written bucketed by term before merging, so the
-  merge (``operators/index.merge_postings_colocated``, a full-outer join
+  merge (``operators/index.merge_postings``, a full-outer join
   on term) is CO-LOCATED: zero exchanges in the merge plan — the big
   maintained index is never re-shuffled to absorb a delta. Pinned by
   tests/test_streaming.py. The per-batch delta write is the price, and
@@ -64,10 +64,7 @@ from pyspark.sql import functions as F
 # discipline (advisor finding, round 5; deduplicated with
 # sources/transact.py in round 6's self-review).
 from mapreduceindexer_spark.ioutil import fsync_path as _fsync_dir
-from mapreduceindexer_spark.operators.index import (
-    build_postings,
-    merge_postings_colocated,
-)
+from mapreduceindexer_spark.operators.index import build_postings, merge_postings
 
 
 def _write_doc_slices(
@@ -281,7 +278,7 @@ def streaming_index_build(
             else:
                 d_tbl = f"{prefix}_d{bid}"
                 _write_bucketed(delta, d_tbl, n_buckets)
-                merged = merge_postings_colocated(
+                merged = merge_postings(
                     ss.table(f"{prefix}_v{bid}"), ss.table(d_tbl)
                 )
                 if merge_plans is not None:

@@ -1719,6 +1719,35 @@ def test_stale_expected_version_after_vacuum_is_commit_conflict(
     assert stale not in t.versions()
     with pytest.raises(CommitConflict, match="retired by retention"):
         t.commit(spark.range(9), mode="overwrite", expected_version=stale)
+    # Every writer that takes expected_version resolves it the same way,
+    # the partitioned ones included.
+    from pyspark.sql import functions as F
+
+    rows = spark.range(12).withColumn("p", F.col("id") % 3)
+    writers = {
+        "commit": lambda t: t.commit(rows, expected_version=1),
+        "commit_partitioned": lambda t: t.commit_partitioned(
+            spark, rows, "p", mode="append", expected_version=1
+        ),
+        "replace_partitions": lambda t: t.replace_partitions(
+            spark, rows.where("p = 1"), [1], expected_version=1
+        ),
+        "delete_where_part": lambda t: t.delete_where_part(
+            spark, lo=1, hi=1, expected_version=1
+        ),
+        "rewrite_partitioned": lambda t: t.rewrite_partitioned(
+            spark, expected_version=1
+        ),
+    }
+    for name, write in writers.items():
+        t = TransactionalTable(str(tmp_path / name))
+        t.commit_partitioned(spark, rows, "p")
+        t.commit_partitioned(spark, rows, "p", mode="append")
+        t.vacuum(keep_versions=1, grace_seconds=0.0)
+        assert t.versions() == [2], name
+        with pytest.raises(CommitConflict, match="retired by retention"):
+            write(t)
+        assert t.versions() == [2], name
 
 
 def test_upsert_eq_matches_merge_and_scopes_to_registered_dirs(spark, tmp_path):
@@ -2510,6 +2539,40 @@ def test_layout_pruning_survives_a_dv_delete(spark, tmp_path, transform):
     ) == [10, 11, 12]
     t.delete_where(spark, "id", lo=10, hi=12)
     assert _ids(t.read(spark)) == [i for i in range(1, 40) if not 10 <= i <= 12]
+
+
+def test_a_write_that_adds_no_dir_keeps_the_partition_layout(spark, tmp_path):
+    """A delete that matches nothing and an empty merge batch carry
+    every dir and add none, so the layout carries with them: a point
+    plan still keeps one bucket of four, and replace_partitions still
+    accepts the version."""
+    t = TransactionalTable(str(tmp_path / "t"))
+    rows = spark.range(40)
+    v1 = t.commit_partitioned(
+        spark, rows, "id", transform="bucket[4]", stats_cols=("id",)
+    )
+    bucket_of_7 = t._transform_key_py(7, "bucket", 4)
+    assert len(_dirs(t, {"id": [7]}, v1)[0]) == 1
+    v2 = t.delete_where(spark, "id", lo=1000, hi=2000)
+    v3 = t.merge_rows(spark, spark.range(0), "id")
+    for v in (v2, v3):
+        m = t._manifest(v)
+        assert m["dirs"] == t._manifest(v1)["dirs"], v
+        assert m["specs"] == [{"col": "id", "transform": "bucket[4]"}], v
+        assert m["meta"]["partition_transform"] == "bucket[4]", v
+        kept, skipped = _dirs(t, {"id": [7]}, v)
+        assert len(kept) == 1 and len(skipped) == 3, v
+        assert _ids(t.scan(spark, t.plan({"id": [7]}, v))) == [7]
+    v4 = t.replace_partitions(
+        spark,
+        rows.where("id = 7"),
+        [bucket_of_7],
+        expected_version=v3,
+    )
+    assert _ids(t.read(spark, v4)) == [
+        i for i in range(40)
+        if i == 7 or t._transform_key_py(i, "bucket", 4) != bucket_of_7
+    ]
 
 
 def test_layout_proof_needs_a_recorded_transform(spark, tmp_path):

@@ -60,6 +60,7 @@ class TableMachine(RuleBasedStateMachine):
         self.model: dict[int, dict[int, int]] = {}  # version -> {id: payload}
         self.next_id = 0
         self.counter = 0
+        self.carried_to = 0  # newest version the carry invariant checked
 
     def _fresh_rows(self, n: int) -> dict[int, int]:
         rows = {
@@ -418,6 +419,37 @@ class TableMachine(RuleBasedStateMachine):
             assert got == want, f"v{v}: {got} != {want}"
             fc = self.t.fast_count(v)
             assert fc is None or fc == len(want), (v, fc, len(want))
+
+    @invariant()
+    def each_new_version_carries_its_shared_dirs(self):
+        """Every version written since the last check keeps what its
+        predecessor (the previous version, or a restore's target)
+        recorded about each dir both list: the same stats entry, the
+        same ``dv`` and ``eq`` lists or those lists extended, and, when
+        the predecessor had a layout and the write added no dir, the
+        same spec."""
+        cur = self.t.current_version()
+        live = set(self.t.versions())
+        for v in range(self.carried_to + 1, cur + 1):
+            if v not in live:
+                continue
+            m = self.t._manifest(v)
+            base = m.get("meta", {}).get("restored_from", v - 1)
+            if base not in live:
+                continue
+            p = self.t._manifest(base)
+            shared = set(p["dirs"]) & set(m["dirs"])
+            for d in shared:
+                assert m.get("stats", {}).get(d) == p.get("stats", {}).get(d), (v, d)
+                for k in ("dv", "eq"):
+                    old = p.get(k, {}).get(d, [])
+                    assert m.get(k, {}).get(d, [])[: len(old)] == old, (v, k, d)
+            p_specs = self.t._dir_specs(p)
+            if p_specs is not None and set(m["dirs"]) <= set(p["dirs"]):
+                m_specs = self.t._dir_specs(m) or {}
+                for d in shared:
+                    assert m_specs.get(d) == p_specs.get(d), (v, d)
+        self.carried_to = cur
 
     @invariant()
     def history_rows_match_model(self):
